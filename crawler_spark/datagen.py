@@ -352,19 +352,3 @@ def synth_edges(
 
     base = spark.range(0, n_nodes, 1, partitions)
     return base.mapInPandas(gen, schema="src long, dst long")
-
-
-def robots_df(spark: SparkSession, n_hosts: int, seed: int = 42) -> DataFrame:
-    """Synthetic robots rules: ~10% of hosts disallow /p7* prefixed
-    paths; crawl delay drawn in [0.1, 2.1)s."""
-    h = np.arange(n_hosts)
-    dis = rng.u01(seed, h, 21) < 0.10
-    delay = 0.1 + 2.0 * rng.u01(seed, h, 22)
-    pdf = pd.DataFrame(
-        {
-            "host": [f"host{i}.test" for i in h.tolist()],
-            "disallow_prefix": ["/p7" if d else None for d in dis.tolist()],
-            "crawl_delay_s": delay,
-        }
-    )
-    return spark.createDataFrame(pdf, schema=schemas.ROBOTS)

@@ -132,7 +132,7 @@ class CrawlEngine:
         self.epoch = 0
         self.walks_changed = 0  # the walksTracker counter (process.go:118-123)
         # |edges|, maintained incrementally from delta sizes so the
-        # broadcast-vs-iterative strategy choice never pays an
+        # broadcast-vs-bucketed strategy choice never pays an
         # edges.count() action inside the epoch loop
         self.n_edges = 0
         # the reference's RWS counters (store.go:17-25,129-145),
@@ -216,11 +216,7 @@ class CrawlEngine:
         """Broadcast-CSR vs host-locality bucketed walk machinery,
         decided from the incrementally-tracked edge count (no count()
         action)."""
-        return (
-            "broadcast"
-            if self.n_edges <= walks_gen.BROADCAST_EDGE_LIMIT
-            else "bucketed"
-        )
+        return walks_gen._pick_strategy("auto", lambda: self.n_edges)
 
     def bootstrap(self, seed_urls: list[str], now: _dt.datetime) -> None:
         """S9 cold start (cmd/crawler.go:52-66): seed urls become
@@ -684,7 +680,6 @@ class CrawlEngine:
         `robots` is the single-prefix dimension; `robots_rules` the
         full RFC 9309 rule set (host, allow, pattern[, crawl_delay_s])
         — e.g. frontier.parse_robots output — and supersedes it."""
-        self.epoch += 1
         batch, self.frontier = frontier_mod.schedule_batch(
             self.frontier,
             robots,
@@ -704,9 +699,21 @@ class CrawlEngine:
         )
         self._mark_dirty("_frontier_dirty", (r["b"] for r in brows))
         fetched = web.join(batch.select("url"), "url", "left_semi")
-        stats = self.process_pages(fetched, now)
+        return self.step(
+            fetched, now, {"scheduled": sum(int(r["count"]) for r in brows)}
+        )
+
+    def step(
+        self, pages: DataFrame, now: _dt.datetime, extra: dict | None = None
+    ) -> dict:
+        """The epoch tail shared by `run_epoch` and the streaming
+        micro-batches: process `pages`, run the change-ratio-gated
+        arbiter, merge `extra` into the stats and commit the epoch's
+        snapshot. Returns the stats dict."""
+        self.epoch += 1
+        stats = self.process_pages(pages, now)
         stats.update(self.maybe_arbiter(now))
-        stats["scheduled"] = sum(int(r["count"]) for r in brows)
+        stats.update(extra or {})
         self._commit(now, stats)
         return stats
 

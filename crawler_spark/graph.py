@@ -130,13 +130,6 @@ def nodes_from_urls(
     return mint_node_ids(None, df, status=status, added_ts=added_ts)
 
 
-def edges_from_follow_lists(follow_lists: DataFrame) -> DataFrame:
-    """(node_id, follows: array<long>) -> (src, dst) edge rows."""
-    return follow_lists.select(
-        F.col("node_id").alias("src"), F.explode("follows").alias("dst")
-    )
-
-
 def adjacency_lists(edges: DataFrame) -> DataFrame:
     """J2 bulk Follows: (src, follows: array<long> SORTED).
 
@@ -202,8 +195,3 @@ def resolve_ids(urls_df: DataFrame, nodes: DataFrame, how: str = "left") -> Data
     """P2 NodeIDs bulk url->id (reference database.go:416-447): left
     join keeps a null node_id for unknown urls (the reference's nil)."""
     return urls_df.join(nodes.select("url", "node_id"), "url", how)
-
-
-def urls_of(ids_df: DataFrame, nodes: DataFrame) -> DataFrame:
-    """P3 Pubkeys bulk id->url (reference database.go:451-485)."""
-    return ids_df.join(nodes.select("node_id", "url"), "node_id", "left")

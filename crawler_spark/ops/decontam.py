@@ -53,14 +53,6 @@ def _ngram_keys_from_tokens(toks: Column, n: int) -> Column:
     )
 
 
-def ngram_keys(text: Column, n: int) -> Column:
-    """Distinct md5 keys of all word n-grams of `text` (tokens
-    lowercased, split on non-alnum — the corpus-wide convention of
-    ops/textstats).  Thin text-level wrapper; hot paths project the
-    token array first (see _ngram_keys_from_tokens)."""
-    return _ngram_keys_from_tokens(_tokens_arr(text), n)
-
-
 def eval_ngrams(
     eval_docs: DataFrame, n: int = 13, text_col: str = "text"
 ) -> DataFrame:

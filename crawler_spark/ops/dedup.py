@@ -86,21 +86,6 @@ def exact_dedup(
     )
 
 
-def char_shingles(text: Column, k: int = 3) -> Column:
-    """Distinct character k-grams of the lower-cased text (array),
-    as a pure column expression. NOTE: `substring(t, i, k)` re-seeks
-    the UTF-8 string from the start per position (O(len^2) per doc) —
-    fine for short strings; the hot path uses `shingle_rows`'s Arrow
-    UDF instead."""
-    t = F.lower(text)
-    n = F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), n), lambda i: F.substring(t, i, k)
-        )
-    )
-
-
 def shingle_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3
 ) -> DataFrame:

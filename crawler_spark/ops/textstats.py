@@ -446,11 +446,6 @@ def top_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
     return F.coalesce(frac, F.lit(0.0)).cast("double")
 
 
-def top_ngram_char_frac_expr(text: Column, n: int) -> Column:
-    """Text-level wrapper of top_ngram_char_frac_from_tokens."""
-    return top_ngram_char_frac_from_tokens(_tokens_arr(text), n)
-
-
 def dup_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
     """Gopher duplicate-n-gram signal (A1.1, n in {5..10}), under this
     repo's excess-occurrence convention (the dup_line_char_frac
@@ -481,11 +476,6 @@ def dup_ngram_char_frac_from_tokens(toks: Column, n: int) -> Column:
         F.least(F.lit(1.0), res["excess"] / total)
     )
     return F.coalesce(frac, F.lit(0.0)).cast("double")
-
-
-def dup_ngram_char_frac_expr(text: Column, n: int) -> Column:
-    """Text-level wrapper of dup_ngram_char_frac_from_tokens."""
-    return dup_ngram_char_frac_from_tokens(_tokens_arr(text), n)
 
 
 def ngram_repetition_stats(

@@ -94,15 +94,6 @@ def walks_needed(length: int, alpha: float) -> int:
     return int(length * (1 - alpha))
 
 
-def expected_distance(total_walks: int, total_nodes: int, active_nodes: int) -> float:
-    """A9 MC error model (reference tests/e2e/e2e_test.go:206-214)."""
-    return (
-        0.05
-        * math.sqrt(2_000_000 / max(total_walks, 1))
-        * (total_nodes / max(active_nodes, 1))
-    )
-
-
 def sample_walks_visiting(
     walks: DataFrame, node_ids: list[int], limit: int, seed: int = 0
 ) -> DataFrame:

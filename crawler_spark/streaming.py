@@ -276,17 +276,13 @@ def run_crawl_stream(
         _pin_active_session(engine.spark)
         fetched = web.join(batch_df.select("url"), "url", "left_semi")
         ts = now or _dt.datetime.now(_dt.timezone.utc)
-        engine.epoch += 1
-        stats = engine.process_pages(fetched, ts)
         # the reference's NodeArbiter runs CONCURRENTLY with the
         # firehose (arbiter.go:44-81, cmd/crawler.go:89-141) — the
         # continuous form must promote/demote and generate walks just
         # like the batch epoch loop, or the crawl-and-rank feedback
-        # loop never closes. Change-ratio-gated, so most batches pay
-        # one counter comparison.
-        stats.update(engine.maybe_arbiter(ts))
-        stats["stream_batch_id"] = batch_id
-        engine._commit(ts, stats)
+        # loop never closes. step's arbiter is change-ratio-gated, so
+        # most batches pay one counter comparison.
+        engine.step(fetched, ts, {"stream_batch_id": batch_id})
 
     writer = (
         admitted.writeStream.foreachBatch(process)
@@ -324,14 +320,10 @@ def run_ingest_stream(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         _pin_active_session(engine.spark)
         ts = now or _dt.datetime.now(_dt.timezone.utc)
-        engine.epoch += 1
-        stats = engine.process_pages(batch_df, ts)
         # arbiter per micro-batch, same as run_crawl_stream: the
         # continuous form promotes/demotes concurrently with ingest
         # (reference arbiter.go:44-81); change-ratio-gated
-        stats.update(engine.maybe_arbiter(ts))
-        stats["stream_batch_id"] = batch_id
-        engine._commit(ts, stats)
+        engine.step(batch_df, ts, {"stream_batch_id": batch_id})
 
     writer = (
         src.writeStream.foreachBatch(process)
@@ -406,11 +398,7 @@ def run_polite_ingest_stream(
             .drop("_sec")
         )
         ts = now or _dt.datetime.now(_dt.timezone.utc)
-        engine.epoch += 1
-        stats = engine.process_pages(pages, ts)
-        stats.update(engine.maybe_arbiter(ts))
-        stats["stream_batch_id"] = batch_id
-        engine._commit(ts, stats)
+        engine.step(pages, ts, {"stream_batch_id": batch_id})
 
     writer = (
         admitted.writeStream.foreachBatch(process)

@@ -1,4 +1,4 @@
-"""Random-walk generation — M1/M2/M3 of the operator inventory.
+"""Random-walk generation — M1/M2 of the operator inventory.
 
 Reference semantics (pkg/walks/generate.go:143-204), per walk from a
 start node s:
@@ -15,16 +15,19 @@ produce IDENTICAL walks (randomness is counter-based, rng.py, keyed by
    two numpy arrays, ~12B/edge); broadcast it and run every walk to
    completion inside one mapInPandas pass — zero shuffles after the
    adjacency build, perfectly parallel over walk ranges. This is the
-   single-node-beating fast path up to O(10^8) edges.
- - 'iterative': Pregel-style; per super-step, join live walk heads
-   against the adjacency table (shuffle on head) and advance one step
-   with a vectorized Arrow UDF; finished walks leave the loop. This is
-   the 10^10-edge path: the per-step 1-row Redis RPC of the reference
-   becomes one co-partitioned join per super-step over ALL live walks.
-   localCheckpoint per super-step truncates lineage (iterative-Spark
-   pitfall).
+   single-node-beating fast path up to BROADCAST_EDGE_LIMIT edges.
+ - 'bucketed': the at-scale path. Adjacency shards and live walk heads
+   cogroup on a host-locality bucket of the head's node id, and the
+   Arrow kernel advances each walk inside its shard until it halts or
+   follows a link into another bucket — many walk steps per shuffle
+   on web-shaped graphs, and the edge table is never collected.
+   Walk repair (walks_update) regrows its segments with the same
+   kernel, so generation and repair share one at-scale path.
 
-Walk ids are minted deterministically: offset + dense_rank(start)*wpn+k
+'auto' picks broadcast up to BROADCAST_EDGE_LIMIT edges and bucketed
+beyond it; any other strategy name is a ValueError.
+
+Walk ids are minted deterministically: offset + node_id*wpn + k
 (the reference's mutable HIncrBy counter, store.go:331-340, replaced by
 reproducible arithmetic).
 """
@@ -43,6 +46,18 @@ from .schemas import DEFAULT_ALPHA, DEFAULT_WALKS_PER_NODE, WALKS
 
 # above this many edges, don't broadcast the adjacency
 BROADCAST_EDGE_LIMIT = 30_000_000
+
+STRATEGIES = ("broadcast", "bucketed", "auto")
+
+
+def _pick_strategy(strategy: str, n_edges) -> str:
+    """Validate `strategy`; resolve 'auto' by the edge count (`n_edges`
+    is a callable, invoked only for 'auto')."""
+    if strategy not in STRATEGIES:
+        raise ValueError(f"unknown walk strategy {strategy!r}; expected {STRATEGIES}")
+    if strategy != "auto":
+        return strategy
+    return "broadcast" if n_edges() <= BROADCAST_EDGE_LIMIT else "bucketed"
 
 
 @dataclass
@@ -117,13 +132,10 @@ class _Paths:
         self.mat[rows, self.lens[rows]] = vals
         self.lens[rows] += 1
 
-    def to_lists(self) -> list:
-        return [self.mat[i, : self.lens[i]].tolist() for i in range(len(self.lens))]
-
     def to_arrow_series(self) -> pd.Series:
         """Zero-python-loop path column: flat values + offsets ->
         Arrow ListArray wrapped for pandas. ~7x cheaper than
-        to_lists + object-dtype conversion at 375k rows, and the
+        per-row lists + object-dtype conversion at 375k rows, and the
         Spark Arrow serializer consumes it without re-encoding."""
         import pyarrow as pa
 
@@ -236,28 +248,21 @@ def generate_walks(
     Returns a WALKS DataFrame. A prebuilt `csr` skips the adjacency
     collect (callers that run many generations per epoch build it
     once)."""
+    # a prebuilt csr answers the size question driver-side — the
+    # looping-caller pattern must not pay an edge-table scan per call
+    # just to pick a strategy
+    strategy = _pick_strategy(
+        strategy, lambda: len(csr.targets) if csr is not None else edges.count()
+    )
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
-    if strategy == "auto":
-        # a prebuilt csr answers the size question driver-side — the
-        # looping-caller pattern must not pay an edge-table scan per
-        # call just to pick a strategy
-        n_edges = len(csr.targets) if csr is not None else edges.count()
-        # beyond the broadcast limit, bucketed (host-locality cogroup)
-        # beats the per-step iterative join: half the shuffle bytes on
-        # web-shaped graphs (BENCH/iterative_scale_r2.json)
-        strategy = "broadcast" if n_edges <= BROADCAST_EDGE_LIMIT else "bucketed"
     if strategy == "broadcast":
         return _generate_broadcast(
             spark, edges, starts, alpha, walks_per_node, seed,
             walk_id_offset, partitions, csr,
         )
     seeds = _walk_seed_df(starts, walks_per_node, walk_id_offset)
-    if strategy == "bucketed":
-        return _generate_bucketed(
-            spark, edges, seeds, alpha, seed, partitions
-        )
-    return _generate_iterative(spark, edges, seeds, alpha, seed, partitions)
+    return _generate_bucketed(spark, edges, seeds, alpha, seed, partitions)
 
 
 # inner advance block: keeps every per-step numpy temporary L2-resident
@@ -280,7 +285,7 @@ def _generate_broadcast(
     """Seed expansion happens INSIDE the workers: only the (small)
     start-node set shuffles; the wpn-fold blowup never crosses the
     wire. walk_id = offset + node_id*wpn + k, identical to
-    _walk_seed_df (the iterative strategy) — strategies stay
+    _walk_seed_df (the bucketed strategy) — strategies stay
     bit-compatible."""
     bc = spark.sparkContext.broadcast(csr if csr is not None else collect_csr(edges))
     wpn = walks_per_node
@@ -317,128 +322,6 @@ def _generate_broadcast(
     return uniq.repartition(partitions).mapInPandas(gen, schema=WALKS)
 
 
-def _generate_iterative(
-    spark: SparkSession,
-    edges: DataFrame,
-    seeds: DataFrame,
-    alpha: float,
-    seed: int,
-    partitions: int,
-    checkpoint_every: int = 4,
-) -> DataFrame:
-    """Pregel-style super-steps: join live heads with adjacency lists,
-    advance one step per join via a vectorized Arrow UDF."""
-    from .graph import adjacency_lists
-    from pyspark.sql.types import (
-        ArrayType, BooleanType, LongType, StructField, StructType,
-    )
-
-    adj = adjacency_lists(edges).withColumnRenamed("src", "head")
-    adj = adj.repartition(partitions, "head").cache()
-    state_schema = StructType(
-        [
-            StructField("walk_id", LongType()),
-            StructField("start_id", LongType()),
-            StructField("path", ArrayType(LongType())),
-            StructField("alive", BooleanType()),
-        ]
-    )
-
-    def one_step(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            n = len(pdf)
-            wids = pdf["walk_id"].to_numpy(np.int64)
-            paths = [np.asarray(p, dtype=np.int64) for p in pdf["path"]]
-            plens = np.fromiter((len(p) for p in paths), np.int64, n)
-            # ragged -> padded matrix (walks are short: ~1/(1-alpha))
-            width = int(plens.max())
-            mat = np.full((n, width), -1, dtype=np.int64)
-            for i, p in enumerate(paths):
-                mat[i, : len(p)] = p
-            degs = np.fromiter(
-                (0 if f is None else len(f) for f in pdf["follows"]),
-                np.int64,
-                n,
-            )
-            was_alive = pdf["alive"].to_numpy(dtype=bool)
-            coin = rng.u01(seed, wids, plens - 1, 0)
-            cont = was_alive & (coin <= alpha) & (degs > 0)
-            rows = np.where(cont)[0]
-            nxt = np.full(n, -1, dtype=np.int64)
-            if rows.size:
-                flat = np.concatenate(
-                    [np.asarray(pdf["follows"].iloc[i], dtype=np.int64)
-                     for i in rows]
-                )
-                offs = np.zeros(len(rows), dtype=np.int64)
-                np.cumsum(degs[rows], out=offs)  # ends; starts = ends - degs
-                starts_off = offs - degs[rows]
-                idx = rng.randint(degs[rows], seed, wids[rows], plens[rows] - 1, 1)
-                nxt[rows] = flat[starts_off + idx]
-            # cycle stop: padded -1 never matches a node id
-            cyc = (mat == nxt[:, None]).any(axis=1)
-            alive_out = cont & ~cyc
-            grow = np.where(alive_out)[0]
-            out_mat = np.concatenate(
-                [mat, np.full((n, 1), -1, dtype=np.int64)], axis=1
-            )
-            out_mat[grow, plens[grow]] = nxt[grow]
-            out_lens = plens + alive_out
-            p_out = _Paths.__new__(_Paths)
-            p_out.mat = out_mat
-            p_out.lens = out_lens
-            yield pd.DataFrame(
-                {
-                    "walk_id": wids,
-                    "start_id": pdf["start_id"].to_numpy(np.int64),
-                    "path": p_out.to_arrow_series(),
-                    "alive": alive_out,
-                }
-            )
-
-    state = seeds.select(
-        "walk_id",
-        "start_id",
-        F.array("start_id").cast("array<long>").alias("path"),
-        F.lit(True).alias("alive"),
-    ).repartition(partitions, "walk_id")
-    finished_parts: list[DataFrame] = []
-    while True:
-        # fuse `checkpoint_every` super-steps into ONE job: per-step
-        # driver actions (not compute) dominate the loop otherwise.
-        # Dead walks ride along for the block (one_step passes them
-        # through) and drop out at the block boundary.
-        for _ in range(checkpoint_every):
-            joined = state.withColumn("head", F.element_at("path", -1)).join(
-                adj, "head", "left"
-            ).select("walk_id", "start_id", "path", "follows", "alive")
-            state = joined.mapInPandas(one_step, schema=state_schema)
-        # LAZY checkpoint + count = ONE job per block (the count's
-        # scan materializes every checkpoint partition); the eager
-        # form paid a second full job of pure scheduling latency per
-        # block — at avg walk length 1/(1-alpha) the loop is
-        # action-latency-bound, not compute-bound
-        state = state.localCheckpoint(eager=False)
-        n_alive = state.filter("alive").count()
-        finished_parts.append(
-            state.filter(~F.col("alive")).select("walk_id", "start_id", "path")
-        )
-        if n_alive == 0:
-            break
-        state = state.filter("alive")
-
-    # finished parts hang off localCheckpoints (lineage truncated), so
-    # the adjacency cache can be released now — repeated callers
-    # (walk repair per epoch) must not accumulate cached blocks
-    adj.unpersist()
-    out = finished_parts[0]
-    for p in finished_parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _generate_bucketed(
     spark: SparkSession,
     edges: DataFrame,
@@ -446,12 +329,11 @@ def _generate_bucketed(
     alpha: float,
     seed: int,
     partitions: int,
-    n_nodes: int | None = None,
-    n_buckets: int | None = None,
     checkpoint_every: int = 2,
 ) -> DataFrame:
     """Host-locality co-partitioned strategy — the 10^10-edge path
-    with MANY walk steps per shuffle.
+    with MANY walk steps per shuffle; walk repair regrows its
+    segments through it too (walks_update._grow_segments_bucketed).
 
     Node ids are minted in url order (graph.mint_node_ids), so
     consecutive id ranges are host-clustered; bucket(id) =
@@ -460,17 +342,16 @@ def _generate_bucketed(
     cogroup on that bucket, and the Arrow kernel advances every walk
     until it halts or FOLLOWS AN INTER-HOST LINK out of the shard —
     so steps-per-shuffle is the mean intra-host run length (~1/(1-
-    locality)) instead of the 1 step per join of the plain iterative
-    strategy. RNG keys are unchanged (seed, walk_id, step), so the
-    walks are bit-identical to broadcast/iterative.
+    locality)) instead of one step per join of the live set. RNG keys
+    are unchanged (seed, walk_id, step), so the walks are
+    bit-identical to broadcast.
     """
-    if n_nodes is None:
-        row = edges.agg(
-            F.greatest(F.max("src"), F.max("dst")).alias("m")
-        ).first()
-        seeds_max = seeds.agg(F.max("start_id")).first()[0]
-        n_nodes = int(max(row["m"] or 0, seeds_max or 0)) + 1
-    B = n_buckets if n_buckets is not None else max(partitions * 4, 16)
+    # one action for both maxima: repair calls this once per epoch
+    row = edges.agg(F.greatest(F.max("src"), F.max("dst")).alias("e")).crossJoin(
+        seeds.agg(F.max("start_id").alias("s"))
+    ).first()
+    n_nodes = int(max(row["e"] or 0, row["s"] or 0)) + 1
+    B = max(partitions * 4, 16)
     n_cap = max(n_nodes, 1)
 
     def np_bucket(ids: np.ndarray) -> np.ndarray:
@@ -484,9 +365,38 @@ def _generate_bucketed(
         ArrayType, BooleanType, IntegerType, LongType, StructField, StructType,
     )
 
+    def pack_shard(key, adj_pdf):
+        # one row per bucket: its CSR as raw int64 buffers, built once
+        # per call — every cogroup round then ships and maps a few
+        # buffers instead of re-serializing and re-sorting the shard
+        heads = adj_pdf["src"].to_numpy(np.int64)
+        lens = np.fromiter(
+            (len(f) for f in adj_pdf["follows"]), np.int64, len(heads)
+        )
+        flat = np.concatenate(
+            [np.asarray(f, dtype=np.int64) for f in adj_pdf["follows"]]
+            + [np.asarray([], dtype=np.int64)]
+        )
+        csr = CSR.from_pairs(np.repeat(heads, lens), flat)
+        return pd.DataFrame(
+            {
+                "bucket": [int(key[0])],
+                "srcs": [csr.srcs.tobytes()],
+                "indptr": [csr.indptr.tobytes()],
+                "targets": [csr.targets.tobytes()],
+            }
+        )
+
     adj_b = (
         adjacency_lists(edges)
         .withColumn("bucket", col_bucket("src"))
+        .groupBy("bucket")
+        .applyInPandas(
+            pack_shard,
+            schema="bucket int, srcs binary, indptr binary, targets binary",
+        )
+        # a pandas UDF's output carries no partitioning: co-partition
+        # the packed shards ONCE here, or every round re-shuffles them
         .repartition(partitions, "bucket")
         .persist()
     )
@@ -501,36 +411,7 @@ def _generate_bucketed(
     )
 
     def one_block(key, state_pdf, adj_pdf):
-        if len(state_pdf) == 0:
-            return pd.DataFrame(
-                {
-                    "walk_id": pd.Series([], dtype=np.int64),
-                    "start_id": pd.Series([], dtype=np.int64),
-                    "path": pd.Series([], dtype=object),
-                    "alive": pd.Series([], dtype=bool),
-                    "bucket": pd.Series([], dtype=np.int32),
-                }
-            )
         bucket = int(key[0])
-        heads = adj_pdf["src"].to_numpy(np.int64)
-        if len(heads):
-            lens = np.fromiter(
-                (len(f) for f in adj_pdf["follows"]), np.int64, len(heads)
-            )
-            flat = (
-                np.concatenate(
-                    [np.asarray(f, dtype=np.int64) for f in adj_pdf["follows"]]
-                )
-                if lens.sum()
-                else np.asarray([], dtype=np.int64)
-            )
-            csr = CSR.from_pairs(np.repeat(heads, lens), flat)
-        else:
-            csr = CSR(
-                np.asarray([], np.int64),
-                np.asarray([0], np.int64),
-                np.asarray([], np.int64),
-            )
         wids = state_pdf["walk_id"].to_numpy(np.int64)
         paths = _Paths.from_lists(
             [np.asarray(p, dtype=np.int64) for p in state_pdf["path"]]
@@ -538,10 +419,19 @@ def _generate_bucketed(
         # already-halted rows ride the fused chain untouched
         was_alive = state_pdf["alive"].to_numpy(dtype=bool)
         paused = np.zeros(len(wids), dtype=bool)
-        advance_walks(
-            wids, paths, csr, alpha, seed, alive=was_alive,
-            pause_bucket=(np_bucket, bucket), paused_out=paused,
-        )
+        # no shard row = no edges: every live walk here sits on a
+        # dangling node, and advancing it would stop it where it is
+        if len(adj_pdf) and was_alive.any():
+            csr = CSR(
+                *(
+                    np.frombuffer(adj_pdf[c].iloc[0], dtype=np.int64)
+                    for c in ("srcs", "indptr", "targets")
+                )
+            )
+            advance_walks(
+                wids, paths, csr, alpha, seed, alive=was_alive,
+                pause_bucket=(np_bucket, bucket), paused_out=paused,
+            )
         new_heads = paths.mat[np.arange(len(wids)), paths.lens - 1]
         out_bucket = np.where(paused, np_bucket(new_heads), bucket).astype(
             np.int32
@@ -565,13 +455,16 @@ def _generate_bucketed(
     )
     finished_parts: list[DataFrame] = []
     while True:
+        # `checkpoint_every` cogroup rounds fuse into ONE job; halted
+        # walks ride along and drop out at the block boundary
         for _ in range(checkpoint_every):
             state = (
                 state.groupBy("bucket")
                 .cogroup(adj_b.groupBy("bucket"))
                 .applyInPandas(one_block, schema=state_schema)
             )
-        # lazy ckpt + count = one job per block (see _generate_broadcast)
+        # lazy ckpt + count = one job per block (the count's scan
+        # materializes every checkpoint partition)
         state = state.localCheckpoint(eager=False)
         n_alive = state.filter("alive").count()
         finished_parts.append(
@@ -581,6 +474,8 @@ def _generate_bucketed(
             break
         state = state.filter("alive")
 
+    # finished parts hang off localCheckpoints: release the adjacency so
+    # per-epoch repair calls don't accumulate cached blocks
     adj_b.unpersist()
     out = finished_parts[0]
     for p in finished_parts[1:]:
@@ -588,7 +483,7 @@ def _generate_bucketed(
     return out
 
 
-# ---- walk store maintenance (M3/M4/M9, A1/A2) ----
+# ---- walk store maintenance (M4/M9, A1/A2) ----
 
 
 def visits_of(walks: DataFrame) -> DataFrame:
@@ -611,11 +506,6 @@ def total_visits(walks: DataFrame) -> int:
     mutable counter: sum of path lengths."""
     row = walks.agg(F.sum(F.size("path"))).first()
     return int(row[0] or 0)
-
-
-def add_walks(walks: DataFrame, new_walks: DataFrame) -> DataFrame:
-    """M3 AddWalks (reference store.go:315-358) — append."""
-    return walks.unionByName(new_walks)
 
 
 def remove_walks(walks: DataFrame, walk_ids: DataFrame) -> DataFrame:

@@ -44,12 +44,12 @@ touches the rest of the store):
  2. *Cut phase* (mapInPandas over the affected walks only): find the
     first invalid hop / graft point and the first regrow step. Needs
     ONLY the broadcast delta maps — no adjacency.
- 3. *Segment regrowth* for the (small) set of walks needing one:
-    either a broadcast-CSR vectorized advance (graphs that fit an
-    executor) or the iterative join machinery of walks_gen
-    (`_generate_iterative`) for 10^10-edge graphs — the two are
-    bit-identical (same counter-RNG keys), and the iterative path
-    never collects the edge table anywhere.
+ 3. *Segment regrowth* for the (small) set of walks needing one,
+    with the same two kernels walk generation uses: a broadcast-CSR
+    vectorized advance (graphs that fit an executor) or the bucketed
+    host-locality cogroup of walks_gen (`_generate_bucketed`) beyond
+    BROADCAST_EDGE_LIMIT. The two are bit-identical (same counter-RNG
+    keys), and the bucketed path never collects the edge table.
  4. *Stitch*: trim the segment at its first prefix collision and
     concatenate — pure column expressions (whole-stage codegen).
 
@@ -74,10 +74,10 @@ from pyspark.sql.types import (
 from . import rng
 from .schemas import DEFAULT_ALPHA
 from .walks_gen import (
-    BROADCAST_EDGE_LIMIT,
     CSR,
-    _generate_iterative,
+    _generate_bucketed,
     _Paths,
+    _pick_strategy,
     advance_walks,
     collect_csr,
 )
@@ -324,7 +324,7 @@ def _grow_segments_broadcast(
 ) -> DataFrame:
     """(seg_key, seg_start) -> (seg_key, seg_path) against a broadcast
     CSR. RNG is keyed (0, seg_key, step, stream) — exactly what the
-    iterative grower draws, so both strategies stay bit-identical."""
+    bucketed grower draws, so both strategies stay bit-identical."""
     bc = spark.sparkContext.broadcast(csr)
 
     def grow(batches):
@@ -345,22 +345,22 @@ def _grow_segments_broadcast(
     )
 
 
-def _grow_segments_iterative(
+def _grow_segments_bucketed(
     spark: SparkSession,
     seg_rows: DataFrame,
     edges_after: DataFrame,
     alpha: float,
     partitions: int | None,
 ) -> DataFrame:
-    """Same contract via the Pregel-style join machinery — the
-    10^10-edge path: the edge table is NEVER collected; per super-step
-    the (small) live segment set joins the adjacency table."""
+    """Same contract via walk generation's bucketed kernel — the
+    10^10-edge path: the edge table is NEVER collected; the (small)
+    live segment set cogroups with the adjacency shards."""
     if partitions is None:
         partitions = spark.sparkContext.defaultParallelism
     seeds = seg_rows.select(
         F.col("seg_key").alias("walk_id"), F.col("seg_start").alias("start_id")
     )
-    segs = _generate_iterative(spark, edges_after, seeds, alpha, 0, partitions)
+    segs = _generate_bucketed(spark, edges_after, seeds, alpha, 0, partitions)
     return segs.select(
         F.col("walk_id").alias("seg_key"), F.col("path").alias("seg_path")
     )
@@ -389,8 +389,9 @@ def update_walks(
 
     `visits` (node_id, walk_id) is the optional materialized inverted
     index; when absent, selection scans paths map-side. `strategy`
-    mirrors generate_walks: 'broadcast' | 'iterative' | 'auto'.
+    mirrors generate_walks: 'broadcast' | 'bucketed' | 'auto'.
     """
+    strategy = _pick_strategy(strategy, edges_after.count)
     dl = _normalize_deltas(deltas)
     removed_map = {n: rm for n, rm, _, _ in dl if rm}
     common_map = {n: co for n, rm, co, _ in dl if rm}
@@ -485,20 +486,12 @@ def update_walks(
     )
     seg_rows = cut.filter(F.col("seg_key").isNotNull())
 
-    # --- segment regrowth (small — only walks needing one).
-    # 'bucketed' callers map to the iterative grower here: the
-    # segment set is delta-sized, so per-step joins are cheap and the
-    # cogroup machinery would be overhead
-    if strategy == "bucketed":
-        strategy = "iterative"
-    if strategy == "auto":
-        n_edges = edges_after.count()
-        strategy = "broadcast" if n_edges <= BROADCAST_EDGE_LIMIT else "iterative"
+    # --- segment regrowth (small — only walks needing one)
     if strategy == "broadcast":
         local_csr = csr if csr is not None else collect_csr(edges_after)
         segs = _grow_segments_broadcast(spark, seg_rows, local_csr, alpha)
     else:
-        segs = _grow_segments_iterative(
+        segs = _grow_segments_bucketed(
             spark, seg_rows, edges_after, alpha, partitions
         )
 

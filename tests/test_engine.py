@@ -7,7 +7,7 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from crawler_spark import datagen, engine
+from crawler_spark import datagen, engine, walks_gen
 
 NOW = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
 
@@ -79,9 +79,14 @@ def test_crawl_discovers_and_promotes(spark, tmp_path):
     assert states <= {"queued", "fetched", "blocked"}
 
 
-def test_crawl_ordering_and_seen_set_deterministic(spark, tmp_path):
+def test_crawl_ordering_and_seen_set_deterministic(spark, tmp_path, monkeypatch):
     eng1, order1, _ = _run(spark, tmp_path, "det_a")
+    assert eng1.walk_strategy == "broadcast"
+    # the second crawl runs past the broadcast limit: bootstrap, arbiter
+    # walk generation and walk repair all take the bucketed kernel
+    monkeypatch.setattr(walks_gen, "BROADCAST_EDGE_LIMIT", -1)
     eng2, order2, _ = _run(spark, tmp_path, "det_b")
+    assert eng2.walk_strategy == "bucketed"
     assert order1 == order2
     seen1 = sorted(r.url for r in eng1.nodes.select("url").collect())
     seen2 = sorted(r.url for r in eng2.nodes.select("url").collect())
@@ -89,6 +94,12 @@ def test_crawl_ordering_and_seen_set_deterministic(spark, tmp_path):
     ids1 = sorted((r.url, r.node_id) for r in eng1.nodes.collect())
     ids2 = sorted((r.url, r.node_id) for r in eng2.nodes.collect())
     assert ids1 == ids2
+    walks1 = sorted((r.walk_id, tuple(r.path)) for r in eng1.walks.collect())
+    walks2 = sorted((r.walk_id, tuple(r.path)) for r in eng2.walks.collect())
+    assert walks1 == walks2
+    pr1 = sorted(map(tuple, eng1.pagerank().collect()))
+    pr2 = sorted(map(tuple, eng2.pagerank().collect()))
+    assert pr1 == pr2
 
 
 def test_empty_and_inactive_follow_lists(spark, tmp_path):

@@ -44,13 +44,19 @@ def test_strategies_produce_identical_walks(spark):
     fx = datagen.FIXTURES["acyclic1"]
     kw = dict(walks_per_node=40, seed=7)
     runs = []
-    for strategy in ("broadcast", "iterative", "bucketed"):
+    for strategy in ("broadcast", "bucketed"):
         w = walks_gen.generate_walks(
             spark, _edges_df(spark, fx), _starts_df(spark, fx),
             strategy=strategy, **kw,
         )
         runs.append(sorted((r["walk_id"], tuple(r["path"])) for r in w.collect()))
-    assert runs[0] == runs[1] == runs[2]
+    assert runs[0] == runs[1]
+    # an unknown strategy name is an error, not a silent fallback
+    with pytest.raises(ValueError, match="unknown walk strategy"):
+        walks_gen.generate_walks(
+            spark, _edges_df(spark, fx), _starts_df(spark, fx),
+            strategy="iterative", **kw,
+        )
 
 
 def test_bucketed_strategy_on_host_local_graph(spark):

@@ -184,8 +184,8 @@ def test_update_deterministic_across_partitionings(spark):
 
 
 def test_update_strategy_equality(spark):
-    """Broadcast-CSR and iterative segment regrowth must produce
-    bit-identical repairs (same counter-RNG keys) — the iterative
+    """Broadcast-CSR and bucketed segment regrowth must produce
+    bit-identical repairs (same counter-RNG keys) — the bucketed
     path is the 10^10-edge route that never collects the edge table."""
     f0 = datagen.random_graph(40, 5, seed=21)
     f1 = datagen.random_graph(40, 5, seed=22)
@@ -209,18 +209,21 @@ def test_update_strategy_equality(spark):
         )
         return sorted((x["walk_id"], tuple(x["path"])) for x in r.collect())
 
-    assert run("broadcast") == run("iterative")
+    assert run("broadcast") == run("bucketed")
+    # an unknown strategy name is an error, not a silent fallback
+    with pytest.raises(ValueError, match="unknown walk strategy"):
+        run("iterative")
 
 
-def test_update_iterative_never_collects_edges(spark, monkeypatch):
-    """VERDICT r1 #3 done-criterion: repair with the iterative
+def test_update_bucketed_never_collects_edges(spark, monkeypatch):
+    """VERDICT r1 #3 done-criterion: repair with the bucketed
     strategy must run without ANY full-edge toPandas (the 10^10
     path). collect_csr is poisoned; only the broadcast path may use
     it."""
     import crawler_spark.walks_update as wu
 
     def boom(_):
-        raise AssertionError("full-edge collect on the iterative path")
+        raise AssertionError("full-edge collect on the bucketed path")
 
     monkeypatch.setattr(wu, "collect_csr", boom)
     fx = datagen.FIXTURES["acyclic1"]
@@ -234,7 +237,7 @@ def test_update_iterative_never_collects_edges(spark, monkeypatch):
     out = walks_update.finish_update(
         walks_update.update_walks(
             spark, walks, _edges_df(spark, follows1), [d],
-            seed=2, epoch=1, strategy="iterative",
+            seed=2, epoch=1, strategy="bucketed",
         )
     )
     assert out.count() == walks.count()
