@@ -91,9 +91,8 @@ def build_engine(spark, path: str, n_nodes: int, now, dedup_state=True):
         # path, not a first-time full write
         from crawler_spark import engine as _em
 
-        eng.doc_fps = spark.createDataFrame([], _em._DOC_FPS_SCHEMA)
-        eng.doc_bands = spark.createDataFrame([], _em._DOC_BANDS_SCHEMA)
-        eng.doc_lines = spark.createDataFrame([], _em._DOC_LINES_SCHEMA)
+        for name in _em._DEDUP_TABLES:
+            eng._start_empty(name)
     eng._commit(now, {"event": "setup"})
     return eng
 

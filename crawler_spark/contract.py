@@ -1183,6 +1183,9 @@ def q_anchor_text_topk(spark, sf_dir):
     return anchors.anchor_text_topk(anchors.anchor_pairs(pages), k=2)
 
 
+# Entries with a DuckDB oracle (ORACLES) come first and rows-only
+# entries last: a correctness check that reads only the first 50 keys
+# then covers 50 SQL-checked entries (see test_entry_contract).
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "s4_latest_event_dedup": q_s4_latest_event_dedup,
     "s2_admission_seen_filter": q_s2_admission_seen_filter,
@@ -1210,8 +1213,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_incremental_lsh": q_dedup_incremental_lsh,
     "dedup_winnow": q_dedup_winnow,
     "dedup_winnow_pairs": q_dedup_winnow_pairs,
-    "ann_cosine_topk_lsh": q_ann_cosine_topk_lsh,
-    "ann_cosine_topk_ivf": q_ann_cosine_topk_ivf,
     "text_stats": q_text_stats,
     "vocab_top_tokens": q_vocab_top_tokens,
     "corpus_filter": q_corpus_filter,
@@ -1226,15 +1227,11 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dsir_importance": q_dsir_importance,
     "classifier_score": q_classifier_score,
     "corpus_profile": q_corpus_profile,
-    "bpe_token_counts": q_bpe_token_counts,
     "ngram_repetition": q_ngram_repetition,
     "mm_frame_plan": q_mm_frame_plan,
     "mm_resize_plan": q_mm_resize_plan,
-    "mm_decode_features": q_mm_decode_features,
-    "mm_video_frames": q_mm_video_frames,
     "ann_cosine_topk": q_ann_cosine_topk,
     "embedding_near_dup": q_embedding_near_dup,
-    "semantic_dedup": q_semantic_dedup,
     "anchor_text_topk": q_anchor_text_topk,
     "shard_assign": q_shard_assign,
     "span_dedup": q_span_dedup,
@@ -1243,6 +1240,12 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "c4_filters": q_c4_filters,
     "url_filter": q_url_filter,
     "host_stats": q_host_stats,
+    "ann_cosine_topk_lsh": q_ann_cosine_topk_lsh,
+    "ann_cosine_topk_ivf": q_ann_cosine_topk_ivf,
+    "bpe_token_counts": q_bpe_token_counts,
+    "mm_decode_features": q_mm_decode_features,
+    "mm_video_frames": q_mm_video_frames,
+    "semantic_dedup": q_semantic_dedup,
     "mc_pagerank": q_mc_pagerank,
     "ppr_source0": q_ppr_source0,
     "ppr_many_sources": q_ppr_many_sources,

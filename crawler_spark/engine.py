@@ -22,14 +22,15 @@ This is the Spark re-expression of the reference's four goroutines
          kill the process anywhere; `CrawlEngine.resume()` restarts
          from the last committed epoch (north_rule).
 
-State tables (all catalog-committed): nodes, edges, walks, visits,
-frontier, filters, doc_fps, doc_bands. The last two are the corpus
-content-dedup state (round 5): per admitted batch the engine
-fingerprints + MinHash-signs the page texts ONCE, consults the stored
-tables for exact/near duplicates (partition-pruned, batch side
-broadcast — the corpus text is never re-read or re-shingled), and
-appends the new fingerprints/band keys at commit, mirroring how the
-reference consults-and-updates admission state per event
+State tables (all catalog-committed, listed once in `_TABLES`): nodes,
+edges, walks, visits, frontier, filters, doc_fps, doc_bands, doc_lines.
+The last three are the corpus content-dedup state (round 5): per
+admitted batch the engine fingerprints + MinHash-signs the page texts
+ONCE, consults the stored tables for exact/near duplicates
+(partition-pruned, batch side broadcast — the corpus text is never
+re-read or re-shingled), and appends the new fingerprints, band keys
+and line counts at commit, mirroring how the reference
+consults-and-updates admission state per event
 (pkg/crawler/process.go:112-117). The exact seen set is `nodes` itself (a url is
 "seen" once it has a node id, exactly like the reference's keyIndex
 membership); the bucketed bloom `filters` table is maintained
@@ -51,12 +52,14 @@ lastWalkID are tracked incrementally on the engine like the
 reference's RWS counters (store.go:129-145) — no per-epoch
 full-store aggregation anywhere in the loop.
 
-Commits are DELTA-COMPOSED for walks/visits/edges/nodes: the epoch
-registers (remove-keys, add-rows) pairs per table, and the commit
-rebuilds only the dirty buckets from the previous snapshot's pruned
-partitions plus those deltas — the logical full-table DataFrames are
-never scanned at commit time, so a delta batch commits in
-O(|dirty buckets| + |delta|), not O(|store|).
+Every table commits at bucket granularity, and commits are
+DELTA-COMPOSED for walks/visits/edges/nodes and the dedup state: the
+epoch registers (remove-keys, add-rows) pairs per table, and the
+commit rebuilds only the dirty buckets from the previous snapshot's
+pruned partitions plus those deltas — the logical full-table
+DataFrames are never scanned at commit time, so a delta batch commits
+in O(|dirty buckets| + |delta|), not O(|store|). The frontier and
+filters commit their in-memory frame's dirty buckets.
 """
 
 from __future__ import annotations
@@ -72,35 +75,31 @@ from .catalog import Catalog
 from .functions.extract import extract_links, is_valid_url
 from .session import pin_active_session
 
-TABLES = (
-    "nodes",
-    "edges",
-    "walks",
-    "visits",
-    "frontier",
-    "filters",
-    "doc_fps",
-    "doc_bands",
-    "doc_lines",
-)
-
-# anti-join keys for delta-composed partial commits, per table
-_PENDING_KEYS = {
-    "walks": ["walk_id"],
-    "visits": ["node_id", "walk_id"],
-    "edges": ["src", "dst"],
-    "nodes": ["node_id"],
-    "doc_fps": ["fp"],
-    "doc_bands": ["doc_id", "band", "key"],
-    "doc_lines": ["fp"],
-}
-
-# content-dedup state table schemas (sign-at-admission corpus side of
+# The one list of catalog-committed tables, in commit order:
+#   name -> (anti-join keys of its delta-composed partial commits,
+#            schema it starts empty with (None: never starts empty),
+#            engine -> bucket column expr (None: the rows carry it)).
+# Every table commits at bucket granularity (see _commit): id-keyed
+# tables by key hash, nodes/frontier by the seen filters' host hash,
+# the content-dedup state (sign-at-admission corpus side of
 # ops.dedup.incremental_exact_dedup / incremental_lsh_pairs /
-# incremental_line_dedup)
-_DOC_FPS_SCHEMA = "fp string, keeper_id long"
-_DOC_BANDS_SCHEMA = "doc_id long, band int, key string"
-_DOC_LINES_SCHEMA = "fp string, n_docs long"
+# incremental_line_dedup) by fingerprint or band-key hash.
+_TABLES = {
+    "nodes": (["node_id"], None, lambda e: seen.url_bucket(F.col("url"), e.n_buckets)),
+    "edges": (["src", "dst"], "src long, dst long", lambda e: e._bucket_of("src")),
+    "walks": (["walk_id"], None, lambda e: e._bucket_of("walk_id")),
+    "visits": (["node_id", "walk_id"], None, lambda e: e._bucket_of("node_id")),
+    "frontier": (None, None, lambda e: e._host_bucket()),
+    "filters": (None, None, None),
+    "doc_fps": (["fp"], "fp string, keeper_id long", lambda e: e._bucket_of_str("fp")),
+    "doc_bands": (
+        ["doc_id", "band", "key"],
+        "doc_id long, band int, key string",
+        lambda e: e._bucket_of_str("key"),
+    ),
+    "doc_lines": (["fp"], "fp string, n_docs long", lambda e: e._bucket_of_str("fp")),
+}
+_DEDUP_TABLES = tuple(n for n in _TABLES if n.startswith("doc_"))
 
 
 class CrawlEngine:
@@ -142,17 +141,14 @@ class CrawlEngine:
         self.total_visits = 0
         self.next_walk_id = 0
         self.next_node_id = 0
-        # bucket-level commit tracking: None => full snapshot rewrite
-        # (bootstrap / arbiter restructure); a set => only those
-        # buckets are written, the rest hardlink from the previous
-        # snapshot (catalog.write_partial). walks/edges bucket by
-        # pmod(xxhash64(key), n_table_buckets); filters already carry
-        # their host-hash bucket column.
+        # bucket-level commit tracking per table: None => full
+        # snapshot rewrite (bootstrap / fresh table); a set => only
+        # those buckets are written, the rest hardlink from the
+        # previous snapshot (catalog.write_partial). Id-keyed tables
+        # bucket by pmod(xxhash64(key), n_table_buckets), host-keyed
+        # ones by the filters' host-hash bucket (see _TABLES).
         self.n_table_buckets = 64
-        self._walks_dirty: set[int] | None = None
-        self._edges_dirty: set[int] | None = None
-        self._filters_dirty: set[int] | None = None
-        self._visits_dirty: set[int] | None = None
+        self._dirty: dict[str, set[int] | None] = dict.fromkeys(_TABLES)
         # delta-composed commit inputs: table -> [(remove_df, add_df)]
         # applied in order onto the previous snapshot's dirty buckets
         self._pending: dict[str, list] = {}
@@ -170,12 +166,6 @@ class CrawlEngine:
         # per-table parquet schema cache (schemas are fixed; see
         # _read_snapshot)
         self._snap_schemas: dict = {}
-        # nodes bucket by the SAME host-hash as the filters, so the
-        # minted-url touched set drives both partial commits
-        self._nodes_dirty: set[int] | None = None
-        # frontier buckets by host hash; per epoch only the scheduled
-        # batch's hosts (and newly enqueued urls' hosts) change state
-        self._frontier_dirty: set[int] | None = None
         self.nodes: DataFrame | None = None
         self.edges: DataFrame | None = None
         self.walks: DataFrame | None = None
@@ -203,9 +193,6 @@ class CrawlEngine:
         # keepers), so duplicates never inflate line stats and the
         # table equals line_corpus_counts over the corpus keepers
         self.doc_lines: DataFrame | None = None
-        self._doc_fps_dirty: set[int] | None = None
-        self._doc_bands_dirty: set[int] | None = None
-        self._doc_lines_dirty: set[int] | None = None
         # tables rolled back by resume's cross-table reconciliation
         self.last_resume_rollback: list[str] = []
 
@@ -226,7 +213,7 @@ class CrawlEngine:
         self.nodes = graph.nodes_from_urls(
             spark, seed_urls, status=schemas.STATUS_ACTIVE, added_ts=now
         )
-        self.edges = spark.createDataFrame([], "src long, dst long")
+        self._start_empty("edges")
         self.n_edges = 0
         self.walks = walks_gen.generate_walks(
             spark,
@@ -245,9 +232,8 @@ class CrawlEngine:
             self.nodes.select("url"), n_buckets=self.n_buckets
         )
         if self.dedup_state:
-            self.doc_fps = spark.createDataFrame([], _DOC_FPS_SCHEMA)
-            self.doc_bands = spark.createDataFrame([], _DOC_BANDS_SCHEMA)
-            self.doc_lines = spark.createDataFrame([], _DOC_LINES_SCHEMA)
+            for name in _DEDUP_TABLES:
+                self._start_empty(name)
         self.epoch = 0
         # the one-time bootstrap scans that seed the incremental
         # counters (every later epoch maintains them from deltas)
@@ -272,35 +258,33 @@ class CrawlEngine:
 
     def _load(self, name: str, snap=None):
         """Read a table's current (or a given) snapshot, stripping/
-        normalizing the bucket partition column the bucketed tables
-        carry on disk."""
+        normalizing the bucket partition column every table carries
+        on disk."""
         cur = snap if snap is not None else self.cat.current(name)
         if cur is not None:
             df = self._read_snapshot(name, cur.path)
         else:
             df = self.cat.read(self.spark, name)
-        if (
-            name
-            in (
-                "walks",
-                "edges",
-                "nodes",
-                "frontier",
-                "visits",
-                "doc_fps",
-                "doc_bands",
-                "doc_lines",
-            )
-            and "bucket" in df.columns
-        ):
-            df = df.drop("bucket")
         if name == "filters":
             # partition col comes back as int and reordered — restore
             # the declared schema shape
-            df = df.select(
+            return df.select(
                 F.col("bucket").cast("long"), "n_items", "m_bits", "bits"
             )
-        return df
+        return df.drop("bucket")
+
+    def _adopt(self, name: str, snap=None) -> None:
+        """Make `name`'s current (or a given) committed snapshot its
+        in-memory state: nothing dirty, pruned snapshot reads valid."""
+        setattr(self, name, self._load(name, snap))
+        self._snap_frames[name] = getattr(self, name)
+        self._dirty[name] = set()
+
+    def _start_empty(self, name: str) -> None:
+        """Start `name` as an empty table; its next commit writes it
+        in full."""
+        setattr(self, name, self.spark.createDataFrame([], _TABLES[name][1]))
+        self._dirty[name] = None
 
     def _snapshot_capped(self, name: str, epoch: int):
         """Latest snapshot of `name` with epoch <= `epoch`. Raises
@@ -356,8 +340,7 @@ class CrawlEngine:
                 # state resume just discarded
                 self.cat.rollback(name, snap.version)
             chosen[name] = snap
-            setattr(self, name, self._load(name, snap))
-            self._snap_frames[name] = getattr(self, name)
+            self._adopt(name, snap)
         cur_nodes = chosen["nodes"]
         self.epoch = cur_nodes.epoch
         # counters from the manifest (metadata, no scan): |edges| and
@@ -406,20 +389,14 @@ class CrawlEngine:
             self.last_resume_rollback.append("visits")
             vsnap = None
         if vsnap is not None:
-            self.visits = self._load("visits", vsnap)
-            self._snap_frames["visits"] = self.visits
+            self._adopt("visits", vsnap)
             self.total_visits = vsnap.n_rows
-            self._visits_dirty = set()
         else:
             # pre-index snapshot: derive once and commit next epoch
             self.visits = walks_gen.visits_of(self.walks)
             self.total_visits = walks_gen.total_visits(self.walks)
-            self._visits_dirty = None  # full write on next commit
-        for name, schema, attr in (
-            ("doc_fps", _DOC_FPS_SCHEMA, "_doc_fps_dirty"),
-            ("doc_bands", _DOC_BANDS_SCHEMA, "_doc_bands_dirty"),
-            ("doc_lines", _DOC_LINES_SCHEMA, "_doc_lines_dirty"),
-        ):
+            self._dirty["visits"] = None  # full write on next commit
+        for name in _DEDUP_TABLES:
             snap = _aux_capped(name)
             if snap is not None and name == "doc_bands":
                 # stored signatures are only consultable under the
@@ -443,18 +420,13 @@ class CrawlEngine:
                         f"cannot be re-signed)"
                     )
             if snap is not None:
-                setattr(self, name, self._load(name, snap))
-                self._snap_frames[name] = getattr(self, name)
-                setattr(self, attr, set())
+                self._adopt(name, snap)
             elif self.dedup_state:
                 # pre-dedup-state store (or torn first adoption):
                 # start fresh (full write next commit) — the sketch
                 # is monotone, so late adoption only means earlier
                 # content isn't consulted, never wrong dups
-                setattr(
-                    self, name, self.spark.createDataFrame([], schema)
-                )
-                setattr(self, attr, None)
+                self._start_empty(name)
         self.last_resume_rollback.sort()
         nid = cur_nodes.metrics.get("next_walk_id")
         self.next_walk_id = (
@@ -472,11 +444,6 @@ class CrawlEngine:
         else:  # pre-counter snapshot: one-time scan
             prev = self.nodes.agg(F.max("node_id")).first()[0]
             self.next_node_id = (prev if prev is not None else -1) + 1
-        self._walks_dirty = set()
-        self._edges_dirty = set()
-        self._filters_dirty = set()
-        self._nodes_dirty = set()
-        self._frontier_dirty = set()
         self._pending = {}
         self._snap_reads = {}
 
@@ -505,8 +472,8 @@ class CrawlEngine:
             F.xxhash64(F.col(key_col)), F.lit(self.n_table_buckets)
         ).cast("int")
 
-    def _mark_dirty(self, attr: str, buckets) -> None:
-        cur = getattr(self, attr)
+    def _mark_dirty(self, name: str, buckets) -> None:
+        cur = self._dirty[name]
         if cur is not None:  # None already means full rewrite
             cur.update(int(b) for b in buckets)
 
@@ -520,15 +487,15 @@ class CrawlEngine:
         self._pending.setdefault(name, []).append((remove, add))
 
     def _commit(self, now: _dt.datetime, extra: dict | None = None) -> None:
-        """Snapshot every table. walks/visits/edges/filters commit at
-        BUCKET granularity: only buckets the epoch touched are
-        written, the rest hardlink from the previous version (the
-        Iceberg overwrite-by-partition shape) — at a 10^12-row walk
-        store this is the difference between committing the delta and
-        rewriting 100 TB per epoch. Tables with registered pending
-        deltas compose the dirty buckets' content from the previous
-        snapshot (partition-pruned read) + the delta rows, so the
-        commit never evaluates the full logical state either."""
+        """Snapshot every table at BUCKET granularity: only buckets
+        the epoch touched are written, the rest hardlink from the
+        previous version (the Iceberg overwrite-by-partition shape) —
+        at a 10^12-row walk store this is the difference between
+        committing the delta and rewriting 100 TB per epoch. Tables
+        with registered pending deltas compose the dirty buckets'
+        content from the previous snapshot (partition-pruned read) +
+        the delta rows, so the commit never evaluates the full logical
+        state either."""
         m = {
             "epoch": self.epoch,
             "walks_changed": self.walks_changed,
@@ -544,123 +511,68 @@ class CrawlEngine:
         }
         if extra:
             m.update(extra)
-        bucketed = {
-            "walks": (self._bucket_of("walk_id"), self._walks_dirty),
-            "visits": (self._bucket_of("node_id"), self._visits_dirty),
-            "edges": (self._bucket_of("src"), self._edges_dirty),
-            "filters": (None, self._filters_dirty),
-            "nodes": (
-                seen.url_bucket(F.col("url"), self.n_buckets),
-                self._nodes_dirty,
-            ),
-            "frontier": (self._host_bucket(), self._frontier_dirty),
-            "doc_fps": (self._bucket_of_str("fp"), self._doc_fps_dirty),
-            "doc_bands": (self._bucket_of_str("key"), self._doc_bands_dirty),
-            "doc_lines": (self._bucket_of_str("fp"), self._doc_lines_dirty),
-        }
+
         def _commit_one(name: str, df: DataFrame) -> None:
             # pool threads build plans (withColumn/filter/union) and
             # run write actions on fresh py4j-paired JVM threads —
             # pin the active-session thread-local first (see
             # session.pin_active_session for the resetMetrics NPE)
             pin_active_session(self.spark)
-            if name in bucketed:
-                expr, dirty = bucketed[name]
-                partial = dirty is not None and self.cat.current(name) is not None
-                if partial and self._pending.get(name):
-                    base = self._read_snapshot(
-                        name, self.cat.current(name).path
-                    )
-                    part = base.filter(
-                        F.col("bucket").isin(sorted(dirty))
-                    ).drop("bucket")
-                    for rm, add in self._pending[name]:
-                        if rm is not None:
-                            # no forced broadcast: deltas are usually
-                            # tiny (AQE broadcasts them at runtime)
-                            # but a mass removal must not OOM the
-                            # driver
-                            part = part.join(
-                                rm, _PENDING_KEYS[name], "left_anti"
-                            )
-                        if add is not None:
-                            part = part.unionByName(add)
-                    dfb = part.withColumn("bucket", expr)
-                    snap = self.cat.write_partial(
-                        name, dfb, sorted(dirty), epoch=self.epoch, metrics=m
-                    )
-                elif partial:
-                    dfb = (
-                        df.withColumn("bucket", expr)
-                        if expr is not None
-                        else df
-                    )
-                    snap = self.cat.write_partial(
-                        name, dfb, sorted(dirty), epoch=self.epoch, metrics=m
-                    )
-                else:
-                    dfb = (
-                        df.withColumn("bucket", expr)
-                        if expr is not None
-                        else df
-                    )
-                    snap = self.cat.write(
-                        name, dfb, epoch=self.epoch,
-                        partition_by=["bucket"], metrics=m,
-                    )
+            keys, _, bucket = _TABLES[name]
+            dirty = self._dirty[name]
+            cur = self.cat.current(name)
+            partial = dirty is not None and cur is not None
+            if partial and self._pending.get(name):
+                # delta-composed: the dirty buckets are rebuilt from
+                # the snapshot plus the pending deltas, not `df`
+                df = (
+                    self._read_snapshot(name, cur.path)
+                    .filter(F.col("bucket").isin(sorted(dirty)))
+                    .drop("bucket")
+                )
+                for rm, add in self._pending[name]:
+                    if rm is not None:
+                        # no forced broadcast: deltas are usually tiny
+                        # (AQE broadcasts them at runtime) but a mass
+                        # removal must not OOM the driver
+                        df = df.join(rm, keys, "left_anti")
+                    if add is not None:
+                        df = df.unionByName(add)
+            if bucket is not None:
+                df = df.withColumn("bucket", bucket(self))
+            if partial:
+                self.cat.write_partial(
+                    name, df, sorted(dirty), epoch=self.epoch, metrics=m
+                )
             else:
-                snap = self.cat.write(name, df, epoch=self.epoch, metrics=m)
+                self.cat.write(
+                    name, df, epoch=self.epoch, partition_by=["bucket"],
+                    metrics=m,
+                )
             # re-read from the committed snapshot: truncates lineage
             # (the iterative-Spark pitfall) and makes the in-memory
             # state exactly the on-disk state
-            setattr(self, name, self._load(name))
-            self._snap_frames[name] = getattr(self, name)
-            return snap
+            self._adopt(name)
 
-        # the six table commits are INDEPENDENT Spark actions over
+        # the table commits are INDEPENDENT Spark actions over
         # disjoint state (separate manifest files, separate version
         # dirs) — run them concurrently so their fixed per-action
         # scheduling latencies overlap instead of summing (the
         # reference commits via concurrent goroutines for the same
         # reason, cmd/crawler.go:89-141); measured ~2x on the commit
-        # phase of a small delta epoch
+        # phase of a small delta epoch. Every table that exists
+        # commits: a standalone process_pages caller with
+        # dedup_state=False never creates the dedup-state tables.
         from concurrent.futures import ThreadPoolExecutor
 
-        to_commit = [
-            ("nodes", self.nodes),
-            ("edges", self.edges),
-            ("walks", self.walks),
-            ("visits", self.visits),
-            ("frontier", self.frontier),
-            ("filters", self.filters),
-        ]
-        # the dedup-state tables commit alongside the rest whenever
-        # they exist (bootstrap/resume initialize them; a standalone
-        # process_pages caller with dedup_state=False never does)
-        if self.doc_fps is not None:
-            to_commit.append(("doc_fps", self.doc_fps))
-        if self.doc_bands is not None:
-            to_commit.append(("doc_bands", self.doc_bands))
-        if self.doc_lines is not None:
-            to_commit.append(("doc_lines", self.doc_lines))
         with ThreadPoolExecutor(max_workers=8) as pool:
             futures = [
-                pool.submit(_commit_one, name, df) for name, df in to_commit
+                pool.submit(_commit_one, name, getattr(self, name))
+                for name in _TABLES
+                if getattr(self, name) is not None
             ]
             for f in futures:
                 f.result()
-        self._walks_dirty = set()
-        self._edges_dirty = set()
-        self._filters_dirty = set()
-        self._nodes_dirty = set()
-        self._frontier_dirty = set()
-        self._visits_dirty = set()
-        if self.doc_fps is not None:
-            self._doc_fps_dirty = set()
-        if self.doc_bands is not None:
-            self._doc_bands_dirty = set()
-        if self.doc_lines is not None:
-            self._doc_lines_dirty = set()
         self._pending = {}
         # snapshot paths are versioned: superseded reads never hit
         # again, so drop them rather than accumulate one per epoch
@@ -691,13 +603,13 @@ class CrawlEngine:
         if robots is not None or robots_rules is not None:
             # robots may flip arbitrary queued rows to 'blocked' —
             # conservatively commit the frontier in full
-            self._frontier_dirty = None
+            self._dirty["frontier"] = None
         # one action: scheduled count AND the frontier dirty buckets
         # (hosts of state-flipped rows)
         brows = (
             batch.groupBy(self._host_bucket().alias("b")).count().collect()
         )
-        self._mark_dirty("_frontier_dirty", (r["b"] for r in brows))
+        self._mark_dirty("frontier", (r["b"] for r in brows))
         fetched = web.join(batch.select("url"), "url", "left_semi")
         return self.step(
             fetched, now, {"scheduled": sum(int(r["count"]) for r in brows)}
@@ -819,12 +731,12 @@ class CrawlEngine:
             self.filters = seen.build_seen_filters(
                 self.nodes.select("url"), n_buckets=self.n_buckets
             )
-            self._filters_dirty = None  # fresh build -> full snapshot
+            self._dirty["filters"] = None  # fresh build -> full snapshot
         if self.visits is None:
             # standalone caller without bootstrap/resume: derive the
             # index + counters once (every later batch maintains them)
             self.visits = walks_gen.visits_of(self.walks)
-            self._visits_dirty = None
+            self._dirty["visits"] = None
             self.total_visits = walks_gen.total_visits(self.walks)
             self.next_walk_id = walks_gen.next_walk_id(self.walks)
         if self.next_node_id == 0:
@@ -840,7 +752,7 @@ class CrawlEngine:
         # the snapshot's bucket partitions — the driver never holds
         # the blob set (12.5 GB at a 10^10-URL frontier)
         fpath = None
-        if self._filters_dirty is not None and not self._filters_dirty:
+        if self._dirty["filters"] == set():
             cur = self.cat.current("filters")
             fpath = cur.path if cur else None
         # eager=False + release: checkpoint MINTED (not the admitted
@@ -911,8 +823,8 @@ class CrawlEngine:
                 filters_path=fpath,
                 add_counts=add_counts,
             )
-            self._mark_dirty("_filters_dirty", touched)
-            self._mark_dirty("_nodes_dirty", touched)
+            self._mark_dirty("filters", touched)
+            self._mark_dirty("nodes", touched)
             # register the mint for the delta-composed commit too: if
             # the SAME epoch later pends node deltas (an arbiter flip),
             # the commit rebuilds dirty buckets from snapshot+pendings
@@ -1030,7 +942,7 @@ class CrawlEngine:
         if n_deltas:
             self.n_edges += sum(int(r["na"]) - int(r["nr"]) for r in drows)
             delta_buckets = sorted(int(r["b"]) for r in drows)
-            self._mark_dirty("_edges_dirty", delta_buckets)
+            self._mark_dirty("edges", delta_buckets)
             self._pend(
                 "edges",
                 deltas.select(
@@ -1093,10 +1005,7 @@ class CrawlEngine:
                 .collect()
             )
             n_up = sum(int(r["n"]) for r in _urows if int(r["k"]) == 0)
-            self._mark_dirty(
-                "_walks_dirty",
-                (r["b"] for r in _urows if int(r["k"]) == 0),
-            )
+            self._mark_dirty("walks", (r["b"] for r in _urows if int(r["k"]) == 0))
             self._pend(
                 "walks",
                 upd.select("walk_id"),
@@ -1142,19 +1051,9 @@ class CrawlEngine:
         # dedup stats cover content-bearing docs only.
         docs = docs.filter(F.col("text").isNotNull())
 
-        if self.doc_fps is None:
-            self.doc_fps = self.spark.createDataFrame([], _DOC_FPS_SCHEMA)
-            self._doc_fps_dirty = None  # fresh table -> full write
-        if self.doc_bands is None:
-            self.doc_bands = self.spark.createDataFrame(
-                [], _DOC_BANDS_SCHEMA
-            )
-            self._doc_bands_dirty = None
-        if self.doc_lines is None:
-            self.doc_lines = self.spark.createDataFrame(
-                [], _DOC_LINES_SCHEMA
-            )
-            self._doc_lines_dirty = None
+        for name in _DEDUP_TABLES:
+            if getattr(self, name) is None:
+                self._start_empty(name)
         # ---- exact side: batch fingerprints, doc-level (for the
         # keeper-identity check below), rolled up per fp (the
         # within-batch keeper = min doc_id, matching exact_dedup);
@@ -1325,14 +1224,8 @@ class CrawlEngine:
         n_line_fps = sum(
             int(r["count"]) for r in _vrows if int(r["k"]) == 2
         )
-        self._mark_dirty(
-            "_doc_fps_dirty",
-            (int(r["b"]) for r in _urows if int(r["k"]) == 0),
-        )
-        self._mark_dirty(
-            "_doc_bands_dirty",
-            (int(r["b"]) for r in _vrows if int(r["k"]) == 1),
-        )
+        self._mark_dirty("doc_fps", (r["b"] for r in _urows if int(r["k"]) == 0))
+        self._mark_dirty("doc_bands", (r["b"] for r in _vrows if int(r["k"]) == 1))
         self._pend("doc_fps", None, new_fps)
         self._pend("doc_bands", None, nb_new)
         self.doc_fps = self.doc_fps.unionByName(new_fps)
@@ -1364,7 +1257,7 @@ class CrawlEngine:
                 )
                 .localCheckpoint(eager=False)
             )
-            self._mark_dirty("_doc_lines_dirty", line_buckets)
+            self._mark_dirty("doc_lines", line_buckets)
             self._pend("doc_lines", hits_l.select("fp"), merged)
             self.doc_lines = self.doc_lines.join(
                 blc.select("fp"), "fp", "left_anti"
@@ -1411,7 +1304,7 @@ class CrawlEngine:
             ]
         elif vis_rm is None and vis_add is None:
             return 0
-        self._mark_dirty("_visits_dirty", (b for b, _ in bucket_rows))
+        self._mark_dirty("visits", (b for b, _ in bucket_rows))
         self._pend(
             "visits",
             vis_rm.select("node_id", "walk_id") if vis_rm is not None else None,
@@ -1438,7 +1331,7 @@ class CrawlEngine:
         epoch's nodes/edges/visits lookups O(|touched buckets|)
         instead of O(|store|) — the DataFrame re-expression of the
         reference's keyIndex point reads (database.go:179-210)."""
-        dirty = getattr(self, f"_{name}_dirty")
+        dirty = self._dirty[name]
         if dirty is None or dirty or self._pending.get(name):
             return None
         if getattr(self, name, None) is not self._snap_frames.get(name):
@@ -1534,7 +1427,7 @@ class CrawlEngine:
                 .select("node_id")
                 .localCheckpoint(eager=True)
             )
-            self._mark_dirty("_nodes_dirty", delta["node_buckets"] or [])
+            self._mark_dirty("nodes", delta["node_buckets"] or [])
             self._pend("nodes", flipped_ids, flipped_new)
             for wdf, is_add in ((removed, False), (added, True)):
                 if wdf is None:
@@ -1544,7 +1437,7 @@ class CrawlEngine:
                     .agg(F.max("walk_id").alias("mx"))
                     .collect()
                 )
-                self._mark_dirty("_walks_dirty", (r["b"] for r in rows))
+                self._mark_dirty("walks", (r["b"] for r in rows))
                 if is_add and rows:
                     self.next_walk_id = max(
                         self.next_walk_id,
@@ -1574,7 +1467,7 @@ class CrawlEngine:
             # SAME definition _host_bucket applies to the frontier's
             # host column at commit time (one definition, two spots)
             self._mark_dirty(
-                "_frontier_dirty",
+                "frontier",
                 (
                     r["b"]
                     for r in promoted.select(

@@ -256,10 +256,12 @@ def url_filter(
     blocklist). The match runs at HOST granularity: the batch's
     distinct lowercased hosts explode into their suffix sets
     (~4 rows/host), semi-join the broadcast lowercased blocklist,
-    and the resulting blocked-host dimension broadcasts back onto
-    the urls — the frontier itself is never shuffled, and the
-    intermediate is bounded by the batch's host count, not its url
-    count."""
+    and the resulting blocked-host dimension joins back onto the
+    urls. That dimension is bounded by the batch's host count, not
+    its url count, but it still grows with the data, so it carries
+    no broadcast hint: AQE broadcasts it at runtime when its actual
+    size is small (the usual case) and a host-heavy batch cannot OOM
+    the driver."""
     host = F.lower(url_host(F.col(url_col)))
     score = url_spam_score(F.col(url_col))
     out = urls.withColumn("_host", host).withColumn("spam_score", score)
@@ -281,7 +283,7 @@ def url_filter(
             .distinct()
             .withColumn("_blk", F.lit(True))
         )
-        out = out.join(F.broadcast(bhosts), "_host", "left").withColumn(
+        out = out.join(bhosts, "_host", "left").withColumn(
             "_blocked", F.coalesce(F.col("_blk"), F.lit(False))
         ).drop("_blk")
     else:

@@ -20,7 +20,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from crawler_spark import datagen, engine, frontier as frontier_mod
+from crawler_spark import datagen, engine
 from crawler_spark.ops import dedup as dd
 
 NOW = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
@@ -67,22 +67,12 @@ def _run_epochs(eng, web, n, start=0):
     stats, ingested = [], []
     for k in range(start, start + n):
         now = NOW + dt.timedelta(minutes=k + 1)
-        batch, eng.frontier = frontier_mod.schedule_batch(
-            eng.frontier,
-            None,
-            now,
-            tick_seconds=eng.tick_seconds,
-            batch_size=eng.batch_size,
+        stats.append(eng.run_epoch(web, now))
+        # the batch run_epoch fetched: the rows it flipped at this tick
+        fetched = eng.frontier.filter(
+            (F.col("state") == "fetched") & (F.col("fetched_ts") == F.lit(now))
         )
-        eng._frontier_dirty = None  # mutated outside run_epoch
-        urls = [r.url for r in batch.select("url").collect()]
-        ingested.append(sorted(urls))
-        eng.epoch += 1
-        fetched = web.join(batch.select("url"), "url", "left_semi")
-        s = eng.process_pages(fetched, now)
-        s.update(eng.maybe_arbiter(now))
-        eng._commit(now, s)
-        stats.append(s)
+        ingested.append(sorted(r.url for r in fetched.select("url").collect()))
     return stats, ingested
 
 
@@ -389,7 +379,7 @@ def test_resume_survives_torn_first_adoption(spark, tmp_path):
 
     # torn first-adoption commit: doc_fps exists ONLY at epoch 3
     orphan = spark.createDataFrame(
-        [("00" * 16, 0)], engine._DOC_FPS_SCHEMA
+        [("00" * 16, 0)], engine._TABLES["doc_fps"][1]
     ).withColumn("bucket", eng._bucket_of_str("fp"))
     eng.cat.write("doc_fps", orphan, epoch=eng.epoch + 1,
                   partition_by=["bucket"])
@@ -398,7 +388,7 @@ def test_resume_survives_torn_first_adoption(spark, tmp_path):
     eng2.resume()  # must not raise
     assert "doc_fps" in eng2.last_resume_rollback
     assert eng2.cat.current("doc_fps") is None
-    assert eng2.doc_fps.count() == 0 and eng2._doc_fps_dirty is None
+    assert eng2.doc_fps.count() == 0 and eng2._dirty["doc_fps"] is None
 
 
 def test_recrawled_keeper_is_not_its_own_duplicate(spark, tmp_path):
@@ -416,11 +406,11 @@ def test_recrawled_keeper_is_not_its_own_duplicate(spark, tmp_path):
     n1 = docs1.count()
     assert s1["docs"] == n1 and s1["dup_exact"] == 0
 
-    bands_dirty_before = set(eng._doc_bands_dirty or ())
+    bands_dirty_before = set(eng._dirty["doc_bands"] or ())
     s2 = eng._ingest_dedup_state(docs1)
     assert s2["docs"] == n1
     assert s2["dup_exact"] == 0  # every doc IS its stored keeper
-    assert set(eng._doc_bands_dirty or ()) == bands_dirty_before
+    assert set(eng._dirty["doc_bands"] or ()) == bands_dirty_before
 
     # a genuinely new doc with a KNOWN fp (keeper not in batch) is
     # still a dup
@@ -458,7 +448,7 @@ def test_resume_rederives_visits_torn_behind_anchor(spark, tmp_path):
     eng2 = _mk(spark, root)
     eng2.resume()
     assert "visits" in eng2.last_resume_rollback
-    assert eng2._visits_dirty is None  # full write on next commit
+    assert eng2._dirty["visits"] is None  # full write on next commit
     assert _rows(eng2.visits) == expected
     assert eng2.total_visits == total
 

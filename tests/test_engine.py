@@ -31,6 +31,19 @@ def _mk(spark, tmp_path, name):
     )
 
 
+def _batch(eng, now):
+    """The urls `run_epoch` fetched at `now`, in scheduling order: the
+    frontier rows it flipped to 'fetched' at that tick."""
+    return [
+        r.url
+        for r in eng.frontier.filter(
+            (F.col("state") == "fetched") & (F.col("fetched_ts") == F.lit(now))
+        )
+        .orderBy(F.desc("priority"), "url")
+        .collect()
+    ]
+
+
 def _run(spark, tmp_path, name, epochs=4):
     web, _ = _web(spark)
     eng = _mk(spark, tmp_path, name)
@@ -40,23 +53,8 @@ def _run(spark, tmp_path, name, epochs=4):
     stats = []
     for k in range(epochs):
         now = NOW + dt.timedelta(minutes=k + 1)
-        batch, eng.frontier = __import__(
-            "crawler_spark.frontier", fromlist=["schedule_batch"]
-        ).schedule_batch(
-            eng.frontier, None, now, tick_seconds=eng.tick_seconds,
-            batch_size=eng.batch_size,
-        )
-        # this loop mutates the frontier outside run_epoch's dirty
-        # tracking -> commit it in full
-        eng._frontier_dirty = None
-        urls = [r.url for r in batch.orderBy(F.desc("priority"), "url").collect()]
-        order.append(urls)
-        eng.epoch += 1
-        fetched = web.join(batch.select("url"), "url", "left_semi")
-        s = eng.process_pages(fetched, now)
-        s.update(eng.maybe_arbiter(now))
-        eng._commit(now, s)
-        stats.append(s)
+        stats.append(eng.run_epoch(web, now))
+        order.append(_batch(eng, now))
     return eng, order, stats
 
 

@@ -122,6 +122,38 @@ def test_delta_apply_broadcasts_small_removals_at_runtime(spark):
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
 
 
+def test_url_filter_hints_broadcast_only_on_blocklist(spark):
+    """The blocklist is a small fixed dimension and keeps its
+    broadcast hint; the blocked-host set joined back onto the urls
+    grows with the batch's host count, so it carries NO forced
+    broadcast — AQE sizes that join at runtime and still broadcasts
+    the usual small set."""
+    from crawler_spark.functions import extract
+
+    urls = spark.createDataFrame(
+        [("https://a.Evil.test/x",), ("https://ok.test/y",)], "url string"
+    )
+    blocked = spark.createDataFrame([("evil.test",)], "domain string")
+    out = extract.url_filter(urls, blocked_domains=blocked)
+    assert sorted((r.url, r.reason) for r in out.collect()) == [
+        ("https://a.Evil.test/x", "blocked_domain"),
+        ("https://ok.test/y", None),
+    ]
+    lines = out._jdf.queryExecution().analyzed().toString().splitlines()
+    hinted = [i for i, l in enumerate(lines) if "ResolvedHint" in l]
+    assert len(hinted) == 1
+    # the one hinted subtree is the lowercased blocklist
+    assert "lower(domain" in lines[hinted[0] + 1]
+    # ...and AQE still broadcasts the small blocked-host set (the
+    # plan after collect() is the final adaptive plan)
+    final = _plan(out).split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert any(
+        "BroadcastHashJoin" in l and "LeftOuter" in l
+        for l in final.splitlines()
+    )
+
+
 def test_exact_dedup_no_window_and_release_shares_one_text_pass(spark):
     """q6 keeper selection: no window over fp in EITHER form (a
     degenerate dup group must never funnel one task's sort), and the
