@@ -261,10 +261,7 @@ class CrawlEngine:
         normalizing the bucket partition column every table carries
         on disk."""
         cur = snap if snap is not None else self.cat.current(name)
-        if cur is not None:
-            df = self._read_snapshot(name, cur.path)
-        else:
-            df = self.cat.read(self.spark, name)
+        df = self._read_snapshot(name, cur.path)
         if name == "filters":
             # partition col comes back as int and reordered — restore
             # the declared schema shape
@@ -585,22 +582,20 @@ class CrawlEngine:
         web: DataFrame,
         now: _dt.datetime,
         robots: DataFrame | None = None,
-        robots_rules: DataFrame | None = None,
     ) -> dict:
         """One full epoch against a `web` pages corpus
         (url, warc_ts, html, text, lang). Returns the metrics dict.
-        `robots` is the single-prefix dimension; `robots_rules` the
-        full RFC 9309 rule set (host, allow, pattern[, crawl_delay_s])
-        — e.g. frontier.parse_robots output — and supersedes it."""
+        `robots` is the RFC 9309 rule set (host, allow, pattern[,
+        crawl_delay_s]) — e.g. frontier.parse_robots output — that
+        schedule_batch evaluates."""
         batch, self.frontier = frontier_mod.schedule_batch(
             self.frontier,
             robots,
             now,
             tick_seconds=self.tick_seconds,
             batch_size=self.batch_size,
-            robots_rules=robots_rules,
         )
-        if robots is not None or robots_rules is not None:
+        if robots is not None:
             # robots may flip arbitrary queued rows to 'blocked' —
             # conservatively commit the frontier in full
             self._dirty["frontier"] = None

@@ -112,7 +112,6 @@ def schedule_batch(
     tick_seconds: float = 60.0,
     batch_size: int = DEFAULT_BATCH,
     default_crawl_delay_s: float = DEFAULT_CRAWL_DELAY_S,
-    robots_rules: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """One scheduler tick. Returns (batch, frontier').
 
@@ -123,88 +122,42 @@ def schedule_batch(
     frontier' = batch rows flipped to 'fetched' (fetched_ts=now) and
                robots-disallowed rows flipped to 'blocked'.
 
-    robots is a small dimension -> broadcast join (no shuffle of the
-    frontier side beyond the per-host window).
-
-    `robots_rules` supersedes the single-prefix `robots=` form with
-    full RFC 9309 evaluation: a `(host, allow, pattern[,
-    crawl_delay_s])` rule set fed through robots_verdicts (multiple
-    Allow/Disallow lines, wildcards, $ anchors, longest-match with
-    allow winning ties); a per-host crawl_delay_s column, if present,
-    feeds the politeness budget."""
+    `robots` is the RFC 9309 rule set `(host, allow, pattern[,
+    crawl_delay_s])` — e.g. parse_robots output — evaluated by
+    robots_verdicts (multiple Allow/Disallow lines, `*` wildcards, `$`
+    anchors, longest match with allow winning ties, a bare-host url
+    as path `/`). A per-host crawl_delay_s column, if present, feeds
+    the politeness budget (max over the host's rows; a row with a
+    null pattern carries only a delay); hosts without one use
+    `default_crawl_delay_s`. The rules are a small dimension ->
+    broadcast joins (no shuffle of the frontier side beyond the
+    per-host window)."""
     queued = frontier.filter(F.col("state") == "queued")
-
-    if robots_rules is not None:
-        v = robots_verdicts(
-            queued.select("url"),
-            robots_rules.select("host", "allow", "pattern"),
-        )
-        blocked = v.filter(~F.col("allowed")).select("url")
-        queued = queued.join(
-            blocked.withColumn("_blocked", F.lit(True)), "url", "left"
-        ).filter(F.col("_blocked").isNull()).drop("_blocked")
-        if "crawl_delay_s" in robots_rules.columns:
-            delays = (
-                robots_rules.groupBy("host")
-                .agg(F.max("crawl_delay_s").alias("crawl_delay_s"))
-            )
-            queued = queued.join(F.broadcast(delays), "host", "left")
-            delay = F.coalesce(
-                "crawl_delay_s", F.lit(default_crawl_delay_s)
-            )
-            # Crawl-delay 0 = unthrottled, not budget-1 (see the
-            # single-prefix branch)
-            budget = F.when(delay <= 0, F.lit(1 << 31)).otherwise(
-                F.greatest(F.lit(1), F.floor(F.lit(tick_seconds) / delay))
-            )
-        else:
-            budget = F.lit(
-                (1 << 31)
-                if default_crawl_delay_s <= 0
-                else max(1, int(tick_seconds // default_crawl_delay_s))
-            )
-    elif robots is not None:
-        rb = robots.select("host", "disallow_prefix", "crawl_delay_s")
-        # path = url minus scheme+host; regexp (not a fixed offset) so
-        # http:// (7 chars) and https:// (8) both keep their leading '/'
-        path = F.regexp_replace("url", r"^https?://[^/]+", "")
-        # a host may carry SEVERAL disallow rows: derive the blocked
-        # url set via join + distinct and subtract it, instead of
-        # left-joining rules onto queued rows — that would duplicate
-        # every queued row per rule, double-counting the politeness
-        # budget and putting the same url into the batch twice.
-        # length > 0: a bare 'Disallow:' (empty prefix) disallows
-        # NOTHING (RFC 9309), exactly as the rules path treats it
+    blocked = None
+    delay = F.lit(default_crawl_delay_s)
+    if robots is not None:
         blocked = (
-            queued.join(F.broadcast(rb), "host")
-            .filter(
-                F.col("disallow_prefix").isNotNull()
-                & (F.length("disallow_prefix") > 0)
-                & path.startswith(F.col("disallow_prefix"))
+            robots_verdicts(
+                queued.select("url"), robots.select("host", "allow", "pattern")
             )
+            .filter(~F.col("allowed"))
             .select("url")
-            .distinct()
         )
         queued = queued.join(blocked, "url", "left_anti")
-        # one delay per host for the budget (max = most conservative)
-        delays = rb.groupBy("host").agg(
-            F.max("crawl_delay_s").alias("crawl_delay_s")
-        )
-        queued = queued.join(F.broadcast(delays), "host", "left")
-        delay = F.coalesce("crawl_delay_s", F.lit(default_crawl_delay_s))
-        # Crawl-delay 0 = the host opted OUT of throttling: tick/0 is
-        # NULL in Spark and greatest(1, NULL) would silently clamp the
-        # UNthrottled host to the most-throttled budget of 1
-        budget = F.when(delay <= 0, F.lit(1 << 31)).otherwise(
-            F.greatest(F.lit(1), F.floor(F.lit(tick_seconds) / delay))
-        )
-    else:
-        blocked = None
-        budget = F.lit(
-            (1 << 31)
-            if default_crawl_delay_s <= 0
-            else max(1, int(tick_seconds // default_crawl_delay_s))
-        )
+        if "crawl_delay_s" in robots.columns:
+            delays = robots.groupBy("host").agg(
+                F.max("crawl_delay_s").alias("crawl_delay_s")
+            )
+            queued = queued.join(F.broadcast(delays), "host", "left")
+            delay = F.coalesce("crawl_delay_s", delay)
+    # Crawl-delay 0 = the host opted OUT of throttling: tick/0 is NULL
+    # in Spark and greatest(1, NULL) would silently clamp the
+    # UNthrottled host to the most-throttled budget of 1. Every host's
+    # budget is Spark's floor(tick / delay), never Python's `//`:
+    # 60 // 0.1 is 599 where floor(60 / 0.1) is 600.
+    budget = F.when(delay <= 0, F.lit(1 << 31)).otherwise(
+        F.greatest(F.lit(1), F.floor(F.lit(tick_seconds) / delay))
+    )
 
     w = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("url"))
     # literal batch_size pre-cap: the per-host budget arrives as a
@@ -223,27 +176,21 @@ def schedule_batch(
             (F.col("_rn") <= F.lit(int(batch_size)))
             & (F.col("_rn") <= F.col("_budget"))
         )
-        .drop("_rn", "_budget", "disallow_prefix", "crawl_delay_s")
+        .drop("_rn", "_budget", "crawl_delay_s")
     )
     batch = polite.orderBy(F.desc("priority"), F.asc("url")).limit(batch_size)
 
-    batch_urls = batch.select("url")
+    updated = frontier.join(
+        batch.select("url").withColumn("_sched", F.lit(True)), "url", "left"
+    )
+    state = F.when(F.col("_sched"), F.lit("fetched"))
+    if blocked is not None:
+        updated = updated.join(
+            blocked.withColumn("_blk", F.lit(True)), "url", "left"
+        )
+        state = state.when(F.col("_blk"), F.lit("blocked"))
     updated = (
-        frontier.join(
-            batch_urls.withColumn("_sched", F.lit(True)), "url", "left"
-        )
-        .join(
-            (blocked.withColumn("_blk", F.lit(True)) if blocked is not None
-             else frontier.limit(0).select("url").withColumn("_blk", F.lit(True))),
-            "url",
-            "left",
-        )
-        .withColumn(
-            "state",
-            F.when(F.col("_sched"), F.lit("fetched"))
-            .when(F.col("_blk"), F.lit("blocked"))
-            .otherwise(F.col("state")),
-        )
+        updated.withColumn("state", state.otherwise(F.col("state")))
         .withColumn(
             "fetched_ts",
             F.when(F.col("_sched"), F.lit(now).cast("timestamp")).otherwise(
@@ -486,9 +433,8 @@ def robots_verdicts(
     winning length ties (§2.2.2), default-allow when nothing matches
     (including hosts with no rules at all). Empty patterns are
     no-ops (an empty Disallow traditionally means "disallow
-    nothing"). This generalizes the single-prefix `robots=` argument
-    of schedule_batch; feed `allowed == false` urls to the 'blocked'
-    state transition.
+    nothing"); a url with no path evaluates as `/`. schedule_batch
+    flips the `allowed == false` urls to 'blocked'.
 
     Scale shape: rules are a broadcast dimension (a robots.txt is
     ~KBs/host); the only frontier-side work is the broadcast join,
@@ -613,8 +559,8 @@ def parse_robots(
     text_col: str = "robots_txt",
 ) -> DataFrame:
     """(host, allow, pattern, crawl_delay_s): fetched robots.txt
-    bodies -> the rule-set dimension robots_verdicts /
-    schedule_batch(robots_rules=) consume. One Arrow batch per
+    bodies -> the rule-set dimension robots_verdicts and
+    schedule_batch's `robots` consume. One Arrow batch per
     partition (mapInPandas), no shuffle — robots bodies are already
     host-keyed and the output is a per-host dimension (~KBs/host, the
     broadcast side downstream). Group selection follows RFC 9309

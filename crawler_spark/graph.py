@@ -142,9 +142,10 @@ def adjacency_lists(edges: DataFrame) -> DataFrame:
 def delta_partition(old_new: DataFrame) -> DataFrame:
     """T3 sliceutils.Partition (reference
     pkg/utils/sliceutils/slice.go:74-105), column-wise and shuffle-free:
-    input (node_id, old_follows, new_follows) -> DELTAS rows with
-    removed = old-new, common = old∩new, added = new-old (each sorted,
-    matching the reference's sorted-merge output order)."""
+    input (node_id, old_follows, new_follows) -> delta rows
+    (node_id, removed, common, added) with removed = old-new,
+    common = old∩new, added = new-old (each sorted, matching the
+    reference's sorted-merge output order)."""
     old = F.coalesce(F.col("old_follows"), F.array().cast("array<long>"))
     new = F.coalesce(F.col("new_follows"), F.array().cast("array<long>"))
     return old_new.select(

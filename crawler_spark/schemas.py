@@ -1,12 +1,12 @@
-"""Explicit schemas for every engine table.
+"""Explicit schemas for the engine's page input and its node, walk
+and frontier tables, plus the production defaults.
 
 The reference keeps an implicit schema in Redis key/field constants
 (reference: pkg/database/redisdb/database.go:20-36,
-pkg/store/redistore/store.go:17-25); here every table is a declared
-StructType enforced on write. IDs are LongType (the reference's uint32,
-widened to avoid unsigned pitfalls), ranks DoubleType, walks
-ArrayType(LongType) — the reference's CSV round-trip
-(pkg/utils/redisutils/format.go:13-41) disappears.
+pkg/store/redistore/store.go:17-25); here those tables are declared
+StructTypes. IDs are LongType (the reference's uint32, widened to
+avoid unsigned pitfalls), walks ArrayType(LongType) — the reference's
+CSV round-trip (pkg/utils/redisutils/format.go:13-41) disappears.
 """
 
 from __future__ import annotations
@@ -51,16 +51,6 @@ NODES = StructType(
 STATUS_ACTIVE = "active"
 STATUS_INACTIVE = "inactive"
 
-# follows adjacency — reference Redis sets follows:<id>
-# (docs/database_design.md:40-47); reverse adjacency is not
-# materialized (derive with groupBy(dst)).
-EDGES = StructType(
-    [
-        StructField("src", LongType(), False),
-        StructField("dst", LongType(), False),
-    ]
-)
-
 # random-walk store — reference pkg/models/store.go:8-9; path has no
 # repeated node (cycle-break invariant, pkg/walks/generate.go:129-134).
 WALKS = StructType(
@@ -68,32 +58,6 @@ WALKS = StructType(
         StructField("walk_id", LongType(), False),
         StructField("start_id", LongType(), False),
         StructField("path", ArrayType(LongType(), False), False),
-    ]
-)
-
-# inverted walk index — reference walksVisiting:<id> sets
-# (docs/store_design.md:53-59); always derivable as explode(path).
-VISITS = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("walk_id", LongType(), False),
-    ]
-)
-
-# graph update unit — reference models.Delta (pkg/models/database.go:82-89)
-DELTAS = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("removed", ArrayType(LongType(), False)),
-        StructField("common", ArrayType(LongType(), False)),
-        StructField("added", ArrayType(LongType(), False)),
-    ]
-)
-
-SCORES = StructType(
-    [
-        StructField("node_id", LongType(), False),
-        StructField("rank", DoubleType(), False),
     ]
 )
 
@@ -107,24 +71,6 @@ FRONTIER = StructType(
         StructField("enqueued_ts", TimestampType()),
         StructField("fetched_ts", TimestampType()),
         StructField("state", StringType()),  # 'queued'|'fetched'|'blocked'
-    ]
-)
-
-# per-epoch metrics row (north_rule: per-partition lineage + metrics)
-METRICS = StructType(
-    [
-        StructField("epoch", LongType(), False),
-        StructField("name", StringType(), False),
-        StructField("value", DoubleType(), False),
-    ]
-)
-
-# robots.txt cache table (synthetic robots rules in datagen)
-ROBOTS = StructType(
-    [
-        StructField("host", StringType(), False),
-        StructField("disallow_prefix", StringType()),
-        StructField("crawl_delay_s", DoubleType()),
     ]
 )
 

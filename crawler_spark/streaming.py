@@ -235,6 +235,41 @@ def stream_candidates(
     )
 
 
+def _drive(
+    engine: CrawlEngine,
+    stream: DataFrame,
+    checkpoint_dir: str,
+    output_mode: str,
+    to_pages,
+    now: _dt.datetime | None,
+    available_now: bool,
+):
+    """Start `stream` as a foreachBatch query whose every micro-batch
+    maps through `to_pages` (batch_df -> pages) into one
+    `CrawlEngine.step`: process, change-ratio-gated arbiter, snapshot
+    commit. The reference's NodeArbiter runs CONCURRENTLY with the
+    firehose (arbiter.go:44-81, cmd/crawler.go:89-141) — the
+    continuous form must promote/demote and generate walks just like
+    the batch epoch loop, or the crawl-and-rank feedback loop never
+    closes; most batches pay one counter comparison. With
+    `available_now` the query drains what exists and stops. Returns
+    the StreamingQuery."""
+
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        _pin_active_session(engine.spark)
+        ts = now or _dt.datetime.now(_dt.timezone.utc)
+        engine.step(to_pages(batch_df), ts, {"stream_batch_id": batch_id})
+
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_crawl_stream(
     engine: CrawlEngine,
     candidates_dir: str,
@@ -272,26 +307,11 @@ def run_crawl_stream(
         burst_cap=burst_cap,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _pin_active_session(engine.spark)
-        fetched = web.join(batch_df.select("url"), "url", "left_semi")
-        ts = now or _dt.datetime.now(_dt.timezone.utc)
-        # the reference's NodeArbiter runs CONCURRENTLY with the
-        # firehose (arbiter.go:44-81, cmd/crawler.go:89-141) — the
-        # continuous form must promote/demote and generate walks just
-        # like the batch epoch loop, or the crawl-and-rank feedback
-        # loop never closes. step's arbiter is change-ratio-gated, so
-        # most batches pay one counter comparison.
-        engine.step(fetched, ts, {"stream_batch_id": batch_id})
-
-    writer = (
-        admitted.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _drive(
+        engine, admitted, checkpoint_dir, "append",
+        lambda batch_df: web.join(batch_df.select("url"), "url", "left_semi"),
+        now, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_ingest_stream(
@@ -317,22 +337,10 @@ def run_ingest_stream(
         max_files_per_trigger=max_files_per_trigger,
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _pin_active_session(engine.spark)
-        ts = now or _dt.datetime.now(_dt.timezone.utc)
-        # arbiter per micro-batch, same as run_crawl_stream: the
-        # continuous form promotes/demotes concurrently with ingest
-        # (reference arbiter.go:44-81); change-ratio-gated
-        engine.step(batch_df, ts, {"stream_batch_id": batch_id})
-
-    writer = (
-        src.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
+    return _drive(
+        engine, src, checkpoint_dir, "update", lambda batch_df: batch_df,
+        now, available_now,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_polite_ingest_stream(
@@ -378,15 +386,14 @@ def run_polite_ingest_stream(
         cand, crawl_delay_s=crawl_delay_s, burst_cap=burst_cap
     )
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        _pin_active_session(engine.spark)
+    def pages(batch_df: DataFrame) -> DataFrame:
         # re-read page ROWS pinned to the admitted (url, warc_ts)
         # versions — NOT url alone: pages_dir may already hold a
         # NEWER version of a re-crawled url whose own micro-batch has
         # not yet passed the politeness gate, and the latest-per-url
         # window would otherwise process that content ahead of its
         # admitted slot (and then again at its real slot)
-        pages = (
+        return (
             engine.spark.read.schema(schemas.PAGES)
             .parquet(pages_dir)
             .withColumn("_sec", F.col("warc_ts").cast("double"))
@@ -397,17 +404,10 @@ def run_polite_ingest_stream(
             )
             .drop("_sec")
         )
-        ts = now or _dt.datetime.now(_dt.timezone.utc)
-        engine.step(pages, ts, {"stream_batch_id": batch_id})
 
-    writer = (
-        admitted.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return _drive(
+        engine, admitted, checkpoint_dir, "append", pages, now, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 LSH_PAIRS_OUT = "doc_a long, doc_b long"

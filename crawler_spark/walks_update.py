@@ -119,8 +119,8 @@ _SALT_FIRST_ADDED = 4  # candidate choice, added-phase
 
 
 def _normalize_deltas(deltas) -> list[tuple[int, list[int], list[int], list[int]]]:
-    """Accept a DELTAS DataFrame or a list of
-    (node_id, removed, common, added) tuples; return sorted tuples."""
+    """Accept a (node_id, removed, common, added) DataFrame or a list
+    of such tuples; return sorted tuples."""
     if isinstance(deltas, DataFrame):
         rows = deltas.select("node_id", "removed", "common", "added").collect()
         out = [
@@ -374,7 +374,6 @@ def update_walks(
     alpha: float = DEFAULT_ALPHA,
     seed: int = 42,
     epoch: int = 0,
-    csr: CSR | None = None,
     visits: DataFrame | None = None,
     strategy: str = "auto",
     partitions: int | None = None,
@@ -488,8 +487,9 @@ def update_walks(
 
     # --- segment regrowth (small — only walks needing one)
     if strategy == "broadcast":
-        local_csr = csr if csr is not None else collect_csr(edges_after)
-        segs = _grow_segments_broadcast(spark, seg_rows, local_csr, alpha)
+        segs = _grow_segments_broadcast(
+            spark, seg_rows, collect_csr(edges_after), alpha
+        )
     else:
         segs = _grow_segments_bucketed(
             spark, seg_rows, edges_after, alpha, partitions

@@ -50,10 +50,12 @@ def test_multi_tick_schedule_matches_oracle(spark):
          "crawl_delay_s": [5.0, 10.0, 30.0][i % 3]}
         for i, h in enumerate(hosts)
     ]
+    # the same robots as an RFC 9309 rule set: a prefix is one
+    # Disallow row; a host with no prefix keeps only its delay
     robots = spark.createDataFrame(
-        [(r["host"], r["disallow_prefix"], r["crawl_delay_s"])
+        [(r["host"], False, r["disallow_prefix"], r["crawl_delay_s"])
          for r in robots_rows],
-        schema=schemas.ROBOTS,
+        "host string, allow boolean, pattern string, crawl_delay_s double",
     )
 
     def mk_rows(n, offset):

@@ -241,30 +241,6 @@ def test_mint_and_arbiter_flip_same_epoch_commit(spark, tmp_path, monkeypatch):
     assert datagen.node_url(9) in got_urls  # the mint survived the flip
 
 
-def test_run_epoch_with_robots(spark, tmp_path):
-    """run_epoch with a robots table: disallowed urls flip to
-    'blocked', are never fetched, and the frontier falls back to a
-    full commit (blocked rows can touch arbitrary host buckets)."""
-    import pyspark.sql.functions as Fn
-
-    web, follows = _web(spark)
-    eng = _mk(spark, tmp_path, "robots")
-    eng.bootstrap([datagen.node_url(i) for i in (0, 1, 2)], NOW)
-    robots = spark.createDataFrame(
-        [("node1.test", "/", 1.0)],  # block ALL of node1.test
-        "host string, disallow_prefix string, crawl_delay_s double",
-    )
-    s = eng.run_epoch(web, NOW + dt.timedelta(minutes=1), robots=robots)
-    st = {
-        r.url: r.state for r in eng.frontier.select("url", "state").collect()
-    }
-    assert st[datagen.node_url(1)] == "blocked"
-    assert st[datagen.node_url(0)] == "fetched"
-    # blocked url was not fetched -> its follow list never processed
-    assert eng.edges.filter(Fn.col("src") == 1).count() == 0
-    assert s["scheduled"] == 2
-
-
 def test_resume_from_checkpoint(spark, tmp_path):
     eng1, order1, _ = _run(spark, tmp_path, "resume", epochs=2)
     # a second engine resumes from the same catalog root
@@ -318,15 +294,13 @@ def test_run_epoch_with_robots_rules(spark, tmp_path):
     import pyspark.sql.functions as Fn
 
     web, follows = _web(spark)
-    eng = _mk(spark, tmp_path, "robots_rules")
+    eng = _mk(spark, tmp_path, "robots")
     eng.bootstrap([datagen.node_url(i) for i in (0, 1, 2)], NOW)
     rules = spark.createDataFrame(
         [("node1.test", False, "/*")],  # wildcard-block ALL of node1.test
         "host string, allow boolean, pattern string",
     )
-    s = eng.run_epoch(
-        web, NOW + dt.timedelta(minutes=1), robots_rules=rules
-    )
+    s = eng.run_epoch(web, NOW + dt.timedelta(minutes=1), robots=rules)
     st = {
         r.url: r.state for r in eng.frontier.select("url", "state").collect()
     }

@@ -109,6 +109,11 @@ def _frontier_df(spark, rows):
     return spark.createDataFrame(rows, schema=schemas.FRONTIER)
 
 
+# RFC 9309 rule set with per-host delays; a null pattern carries only
+# the host's crawl delay
+RULES = "host string, allow boolean, pattern string, crawl_delay_s double"
+
+
 def test_schedule_politeness_and_priority(spark):
     rows = []
     for h, n in (("a.test", 10), ("b.test", 10)):
@@ -118,7 +123,7 @@ def test_schedule_politeness_and_priority(spark):
             )
     fr = _frontier_df(spark, rows)
     robots = spark.createDataFrame(
-        [("a.test", None, 30.0), ("b.test", None, 10.0)], schema=schemas.ROBOTS
+        [("a.test", False, None, 30.0), ("b.test", False, None, 10.0)], RULES
     )
     batch, fr2 = frontier.schedule_batch(
         fr, robots, NOW, tick_seconds=60.0, batch_size=50
@@ -148,7 +153,7 @@ def test_schedule_robots_block_and_batch_limit(spark):
     ]
     fr = _frontier_df(spark, rows)
     robots = spark.createDataFrame(
-        [("c.test", "/p", 0.1), ("d.test", None, 0.1)], schema=schemas.ROBOTS
+        [("c.test", False, "/p", 0.1), ("d.test", False, None, 0.1)], RULES
     )
     batch, fr2 = frontier.schedule_batch(
         fr, robots, NOW, tick_seconds=60.0, batch_size=3
@@ -174,13 +179,30 @@ def test_schedule_robots_blocks_http_scheme(spark):
         ("http://e.test/ok", "e.test", None, 1.0, NOW, None, "queued"),
     ]
     fr = _frontier_df(spark, rows)
-    robots = spark.createDataFrame(
-        [("e.test", "/private", 0.1)], schema=schemas.ROBOTS
-    )
+    robots = spark.createDataFrame([("e.test", False, "/private", 0.1)], RULES)
     batch, fr2 = frontier.schedule_batch(fr, robots, NOW, 60.0, 50)
     assert [r.url for r in batch.collect()] == ["http://e.test/ok"]
     blocked = {r.url for r in fr2.filter(F.col("state") == "blocked").collect()}
     assert blocked == {"http://e.test/private/x", "https://e.test/private/y"}
+
+
+def test_schedule_budget_one_arithmetic_with_and_without_rules(spark):
+    """The per-host budget is floor(tick / delay) in float arithmetic
+    whether or not a rule set is passed: 60 / 0.1 gives 600 slots.
+    Python's 60 // 0.1 is 599, which the no-robots path once used
+    while a rule set with a crawl_delay_s column gave 600."""
+    rows = [
+        (f"https://k.test/p{i:03d}", "k.test", None, 1.0, NOW, None, "queued")
+        for i in range(700)
+    ]
+    fr = _frontier_df(spark, rows)
+    other = spark.createDataFrame([("other.test", False, "/x", 5.0)], RULES)
+    for robots in (None, other):
+        batch, _ = frontier.schedule_batch(
+            fr, robots, NOW, tick_seconds=60.0, batch_size=1000,
+            default_crawl_delay_s=0.1,
+        )
+        assert batch.count() == 600
 
 
 def test_schedule_deterministic_across_partitionings(spark):
@@ -537,9 +559,7 @@ def test_schedule_batch_with_rfc9309_rules(spark):
         ],
         "host string, allow boolean, pattern string, crawl_delay_s double",
     )
-    batch, updated = frontier.schedule_batch(
-        fr, None, now, batch_size=10, robots_rules=rules
-    )
+    batch, updated = frontier.schedule_batch(fr, rules, now, batch_size=10)
     assert sorted(r.url for r in batch.collect()) == [
         "https://a.test/p/pub/ok",
         "https://b.test/ok",
@@ -818,9 +838,7 @@ def test_schedule_empty_disallow_blocks_nothing(spark):
         for i in range(3)
     ]
     fr = _frontier_df(spark, rows)
-    robots = spark.createDataFrame(
-        [("f.test", "", 1.0)], schema=schemas.ROBOTS
-    )
+    robots = spark.createDataFrame([("f.test", False, "", 1.0)], RULES)
     batch, fr2 = frontier.schedule_batch(fr, robots, NOW, 60.0, 50)
     assert batch.count() == 3
     assert fr2.filter(F.col("state") == "blocked").count() == 0
@@ -835,9 +853,7 @@ def test_schedule_crawl_delay_zero_is_unthrottled(spark):
         for i in range(10)
     ]
     fr = _frontier_df(spark, rows)
-    robots = spark.createDataFrame(
-        [("g.test", None, 0.0)], schema=schemas.ROBOTS
-    )
+    robots = spark.createDataFrame([("g.test", False, None, 0.0)], RULES)
     batch, _ = frontier.schedule_batch(fr, robots, NOW, 60.0, 50)
     assert batch.count() == 10
 
@@ -855,8 +871,7 @@ def test_schedule_multiple_disallow_rows_per_host(spark):
     ]
     fr = _frontier_df(spark, rows)
     robots = spark.createDataFrame(
-        [("m.test", "/p", 30.0), ("m.test", "/q", 30.0)],
-        schema=schemas.ROBOTS,
+        [("m.test", False, "/p", 30.0), ("m.test", False, "/q", 30.0)], RULES
     )
     batch, fr2 = frontier.schedule_batch(
         fr, robots, NOW, tick_seconds=60.0, batch_size=50
