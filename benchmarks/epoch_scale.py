@@ -8,11 +8,15 @@ growing nodes/edges/walks stores, two ways per size:
   snapshot PARTITION-PRUNED to the batch's buckets
   (engine._pruned_table). Epoch cost must track |batch buckets|,
   not |store|.
-- `full`: the same engine with pruning monkeypatched off — every
-  lookup streams the full in-memory table, the round-2 shape.
+- `full`: the same engine with `_pruned_table` monkeypatched to
+  return the in-memory table — every lookup streams the full table,
+  the round-2 shape.
 
-Setup (state build + full bootstrap commit) is untimed; the timed
-region is exactly one process_pages + partial commit.
+Setup is untimed: it assigns all nine engine tables and every
+counter itself (a ring+chord store with edges and walks already in
+place, which bootstrap's seed-url cold start does not build) and
+makes the full first commit. The timed region is exactly one
+process_pages + partial commit.
 
 Usage: python benchmarks/epoch_scale.py [--out PATH] [--cpus N]
 """
@@ -30,7 +34,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def build_engine(spark, path: str, n_nodes: int, now, dedup_state=True):
+def build_engine(spark, path: str, n_nodes: int, now):
     import pyspark.sql.functions as F
 
     from crawler_spark import frontier as frontier_mod
@@ -39,7 +43,6 @@ def build_engine(spark, path: str, n_nodes: int, now, dedup_state=True):
 
     eng = CrawlEngine(
         spark, path, walks_per_node=4, n_buckets=256, batch_size=10, seed=1,
-        dedup_state=dedup_state,
     )
     eng.n_table_buckets = 256
     eng.nodes = spark.range(n_nodes).select(
@@ -85,14 +88,13 @@ def build_engine(spark, path: str, n_nodes: int, now, dedup_state=True):
     eng.next_walk_id = walks_gen.next_walk_id(eng.walks)
     eng.total_visits = walks_gen.total_visits(eng.walks)
     eng.next_node_id = n_nodes
-    if dedup_state:
-        # what bootstrap() does: commit the (empty) dedup-state tables
-        # so the timed epoch measures the steady-state PARTIAL commit
-        # path, not a first-time full write
-        from crawler_spark import engine as _em
+    # what bootstrap() does: commit the (empty) dedup-state tables so
+    # the timed epoch measures the steady-state PARTIAL commit path,
+    # not a first-time full write
+    from crawler_spark import engine as _em
 
-        for name in _em._DEDUP_TABLES:
-            eng._start_empty(name)
+    for name in _em._DEDUP_TABLES:
+        eng._start_empty(name)
     eng._commit(now, {"event": "setup"})
     return eng
 
@@ -131,20 +133,15 @@ def main() -> None:
     results = []
     orig_pruned = engine_mod.CrawlEngine._pruned_table
     for n_nodes in [int(s) for s in args.sizes.split(",")]:
-        # pruned_nodedup isolates the round-5 dedup-state maintenance
-        # cost (fingerprint+sign+consult+append, 2 extra table commits)
-        for mode in ("pruned", "full", "pruned_nodedup"):
+        for mode in ("pruned", "full"):
             work = tempfile.mkdtemp(prefix=f"epoch{n_nodes}{mode}")
             try:
                 engine_mod.CrawlEngine._pruned_table = (
                     orig_pruned
-                    if mode in ("pruned", "pruned_nodedup")
-                    else (lambda self, name, buckets: None)
+                    if mode == "pruned"
+                    else (lambda self, name, buckets: getattr(self, name))
                 )
-                eng = build_engine(
-                    spark, work + "/cat", n_nodes, now,
-                    dedup_state=(mode != "pruned_nodedup"),
-                )
+                eng = build_engine(spark, work + "/cat", n_nodes, now)
                 pages = batch(n_nodes)
                 pages.count()  # materialize the input outside the timing
                 # job count = all-job id delta across the timed region
@@ -178,7 +175,7 @@ def main() -> None:
 
     by = {
         m: {r["n_nodes"]: r["seconds"] for r in results if r["mode"] == m}
-        for m in ("pruned", "full", "pruned_nodedup")
+        for m in ("pruned", "full")
     }
     sizes = sorted(by["pruned"])
     out = {
@@ -191,10 +188,6 @@ def main() -> None:
         "time_growth_full": round(
             by["full"][sizes[-1]] / by["full"][sizes[0]], 2
         ),
-        "dedup_state_cost_s": {
-            str(n): round(by["pruned"][n] - by["pruned_nodedup"][n], 2)
-            for n in sizes
-        },
     }
     line = json.dumps(out)
     print(line)

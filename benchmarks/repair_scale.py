@@ -9,7 +9,7 @@ walk stores, two ways per store size:
 - `index`: the engine path (round 3) — a MAINTAINED (node_id,
   walk_id) visits table committed as bucket-partitioned parquet and
   read PRUNED to the delta nodes' buckets, exactly what
-  CrawlEngine._visits_index hands to update_walks. Selection cost
+  CrawlEngine._pruned_table("visits", …) hands to update_walks. Selection cost
   tracks |affected| (the pruned partitions), not |store|.
 
 Usage: python benchmarks/repair_scale.py [--out PATH]

@@ -2558,7 +2558,8 @@ uf_urls as (
      + case when contains(u, 'sale') then 1 else 0 end
      + case when len(regexp_replace(u, '[^0-9]', '', 'g')) > 4
             then 1 else 0 end
-     + case when len(u) - len(host) > 120 then 1 else 0 end
+     + case when len(regexp_extract(u, '^https?://[^/?#]+([^#]*)', 1))
+            > 120 then 1 else 0 end
     )::int as spam_score,
     (host in ('blocked0.test', 'blocked1.test', 'blocked2.test')
      or host like '%.blocked0.test' or host like '%.blocked1.test'

@@ -60,6 +60,12 @@ pruned partitions plus those deltas — the logical full-table
 DataFrames are never scanned at commit time, so a delta batch commits
 in O(|dirty buckets| + |delta|), not O(|store|). The frontier and
 filters commit their in-memory frame's dirty buckets.
+
+Engine state comes from exactly two places, like the reference's
+startup (cmd/crawler.go:52-66 cold start, store.go:129-145 reload):
+`bootstrap()` builds all nine tables and the counters from seed urls
+and commits them; `resume()` reloads them from the last committed
+epoch. Every epoch method assumes one of the two ran first.
 """
 
 from __future__ import annotations
@@ -114,7 +120,6 @@ class CrawlEngine:
         batch_size: int = schemas.DEFAULT_QUERY_BATCH,
         tick_seconds: float = 60.0,
         promotion_wait_s: float = schemas.ARBITER_PROMOTION_WAIT_S,
-        dedup_state: bool = True,
         dedup_hashes: int = 16,
         dedup_bands: int = 4,
         dedup_shingle_k: int = 3,
@@ -181,7 +186,6 @@ class CrawlEngine:
         # changed appends its new fingerprint/bands and keeps the old
         # ones, so "is this content a dup of anything the crawl has
         # EVER admitted" stays answerable without storing any text.
-        self.dedup_state = dedup_state
         self.dedup_hashes = dedup_hashes
         self.dedup_bands = dedup_bands
         self.dedup_shingle_k = dedup_shingle_k
@@ -231,9 +235,8 @@ class CrawlEngine:
         self.filters = seen.build_seen_filters(
             self.nodes.select("url"), n_buckets=self.n_buckets
         )
-        if self.dedup_state:
-            for name in _DEDUP_TABLES:
-                self._start_empty(name)
+        for name in _DEDUP_TABLES:
+            self._start_empty(name)
         self.epoch = 0
         # the one-time bootstrap scans that seed the incremental
         # counters (every later epoch maintains them from deltas)
@@ -341,9 +344,8 @@ class CrawlEngine:
         cur_nodes = chosen["nodes"]
         self.epoch = cur_nodes.epoch
         # counters from the manifest (metadata, no scan): |edges| and
-        # totalVisits are snapshot row counts; lastWalkID rides in the
-        # commit metrics (with a one-time scan fallback for snapshots
-        # written before the counter existed)
+        # totalVisits are snapshot row counts; lastWalkID and the
+        # node-id counter ride in every commit's metrics
         self.n_edges = chosen["edges"].n_rows
         # auxiliary tables (visits index, dedup-state sketches):
         # recovered INDEPENDENTLY — each either loads its snapshot at
@@ -389,7 +391,8 @@ class CrawlEngine:
             self._adopt("visits", vsnap)
             self.total_visits = vsnap.n_rows
         else:
-            # pre-index snapshot: derive once and commit next epoch
+            # torn commit (behind the anchor above, or no snapshot at
+            # <= resume_epoch): re-derive once, full write next commit
             self.visits = walks_gen.visits_of(self.walks)
             self.total_visits = walks_gen.total_visits(self.walks)
             self._dirty["visits"] = None  # full write on next commit
@@ -418,29 +421,21 @@ class CrawlEngine:
                     )
             if snap is not None:
                 self._adopt(name, snap)
-            elif self.dedup_state:
-                # pre-dedup-state store (or torn first adoption):
-                # start fresh (full write next commit) — the sketch
-                # is monotone, so late adoption only means earlier
-                # content isn't consulted, never wrong dups
+            else:
+                # torn first adoption: start fresh (full write next
+                # commit) — the sketch is monotone, so late adoption
+                # only means earlier content isn't consulted, never
+                # wrong dups
                 self._start_empty(name)
         self.last_resume_rollback.sort()
-        nid = cur_nodes.metrics.get("next_walk_id")
-        self.next_walk_id = (
-            int(nid) if nid is not None else walks_gen.next_walk_id(self.walks)
-        )
+        self.next_walk_id = int(cur_nodes.metrics["next_walk_id"])
         # the walksTracker counter is persisted by every commit; losing
         # it on restart would reset the arbiter's change-ratio signal
         # to 0 each time, deferring promotion indefinitely under
         # periodic restarts (reference keeps it in RWS state,
         # process.go:118-123)
         self.walks_changed = int(cur_nodes.metrics.get("walks_changed") or 0)
-        nnid = cur_nodes.metrics.get("next_node_id")
-        if nnid is not None:
-            self.next_node_id = int(nnid)
-        else:  # pre-counter snapshot: one-time scan
-            prev = self.nodes.agg(F.max("node_id")).first()[0]
-            self.next_node_id = (prev if prev is not None else -1) + 1
+        self.next_node_id = int(cur_nodes.metrics["next_node_id"])
         self._pending = {}
         self._snap_reads = {}
 
@@ -557,16 +552,13 @@ class CrawlEngine:
         # scheduling latencies overlap instead of summing (the
         # reference commits via concurrent goroutines for the same
         # reason, cmd/crawler.go:89-141); measured ~2x on the commit
-        # phase of a small delta epoch. Every table that exists
-        # commits: a standalone process_pages caller with
-        # dedup_state=False never creates the dedup-state tables.
+        # phase of a small delta epoch. Every table in _TABLES commits.
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=8) as pool:
             futures = [
                 pool.submit(_commit_one, name, getattr(self, name))
                 for name in _TABLES
-                if getattr(self, name) is not None
             ]
             for f in futures:
                 f.result()
@@ -676,10 +668,7 @@ class CrawlEngine:
         # Checkpointed: feeds candidates, targets and the follow-list
         # delta — each would otherwise re-read the snapshot buckets.
         pages_auth = with_links.join(
-            (auth_nodes if auth_nodes is not None else self.nodes).select(
-                "url", "node_id", "status"
-            ),
-            "url",
+            auth_nodes.select("url", "node_id", "status"), "url"
         ).localCheckpoint(eager=False)
         link_rows = pages_auth.select(
             "node_id", "status", F.explode_outer("links").alias("link")
@@ -722,26 +711,6 @@ class CrawlEngine:
             .select(F.col("link").alias("url"))
             .distinct()
         )
-        if self.filters is None:
-            self.filters = seen.build_seen_filters(
-                self.nodes.select("url"), n_buckets=self.n_buckets
-            )
-            self._dirty["filters"] = None  # fresh build -> full snapshot
-        if self.visits is None:
-            # standalone caller without bootstrap/resume: derive the
-            # index + counters once (every later batch maintains them)
-            self.visits = walks_gen.visits_of(self.walks)
-            self._dirty["visits"] = None
-            self.total_visits = walks_gen.total_visits(self.walks)
-            self.next_walk_id = walks_gen.next_walk_id(self.walks)
-        if self.next_node_id == 0:
-            # same standalone guard for the node-id counter: minting
-            # below passes start_id=next_node_id with known_new=True
-            # (no max scan, no anti-join), which is only sound once the
-            # counter reflects the existing store — a populated engine
-            # always has next_node_id > 0 after this one-time derive
-            prev = self.nodes.agg(F.max("node_id")).first()[0]
-            self.next_node_id = (prev if prev is not None else -1) + 1
         # when the in-memory filters match the committed snapshot
         # (the normal start-of-epoch state), probe EXECUTOR-SIDE from
         # the snapshot's bucket partitions — the driver never holds
@@ -762,9 +731,7 @@ class CrawlEngine:
             self.filters,
             # exact-verify build side pruned to the candidates' url
             # buckets (candidates ⊆ links): never the full url set
-            (link_nodes if link_nodes is not None else self.nodes).select(
-                "url"
-            ),
+            link_nodes.select("url"),
             self.n_buckets,
             filters_path=fpath,
             eager=False,
@@ -811,9 +778,7 @@ class CrawlEngine:
             self.filters, touched = seen.update_seen_filters(
                 self.filters,
                 minted.select("url"),
-                (
-                    link_nodes if link_nodes is not None else self.nodes
-                ).select("url"),
+                link_nodes.select("url"),
                 self.n_buckets,
                 filters_path=fpath,
                 add_counts=add_counts,
@@ -835,18 +800,14 @@ class CrawlEngine:
         # author that is the full list; for an inactive one the known
         # subset (the reference's partial list); for a linkless page
         # an EMPTY list -> full-removal delta.
-        # target resolution against the pruned pre-mint snapshot plus
-        # this epoch's minted rows (minted ⊆ links, so their buckets
-        # are covered) — never a full nodes pass; falls back to the
-        # in-memory frame (which already contains the mint) otherwise
-        if link_nodes is not None:
-            target_nodes = link_nodes.select("url", "node_id")
-            if n_new:
-                target_nodes = target_nodes.unionByName(
-                    minted.select("url", "node_id")
-                )
-        else:
-            target_nodes = self.nodes.select("url", "node_id")
+        # target resolution against the pre-mint link_nodes (pruned
+        # snapshot, or the pre-mint in-memory frame) plus this epoch's
+        # minted rows (minted ⊆ links, so their buckets are covered)
+        target_nodes = link_nodes.select("url", "node_id")
+        if n_new:
+            target_nodes = target_nodes.unionByName(
+                minted.select("url", "node_id")
+            )
         targets = link_rows.join(
             target_nodes.select(
                 F.col("url").alias("link"), F.col("node_id").alias("dst")
@@ -872,8 +833,6 @@ class CrawlEngine:
         # multi-aggregate above) prune the edge snapshot: an author's
         # adjacency lives only in its own bucket partition
         src_edges = self._pruned_table("edges", author_buckets)
-        if src_edges is None:
-            src_edges = self.edges
         old_lists = (
             new_lists.select("node_id")
             .join(
@@ -919,7 +878,7 @@ class CrawlEngine:
         n_deltas = sum(int(r["n"]) for r in drows)
 
         stats = {"pages": n_pages, "new_nodes": n_new, "deltas": n_deltas}
-        if self.dedup_state and n_pages:
+        if n_pages:
             # content-dedup state maintenance: the admitted batch is
             # fingerprinted + MinHash-signed ONCE here (sign at
             # admission), consulted against the stored corpus tables,
@@ -964,7 +923,7 @@ class CrawlEngine:
                 seed=self.seed,
                 epoch=self.epoch,
                 strategy=self.walk_strategy,
-                visits=self._visits_index(delta_buckets),
+                visits=self._pruned_table("visits", delta_buckets),
             )
             # the updated rows (with old_path) materialize once and
             # feed everything delta-shaped below. ONE tagged action
@@ -1046,9 +1005,6 @@ class CrawlEngine:
         # dedup stats cover content-bearing docs only.
         docs = docs.filter(F.col("text").isNotNull())
 
-        for name in _DEDUP_TABLES:
-            if getattr(self, name) is None:
-                self._start_empty(name)
         # ---- exact side: batch fingerprints, doc-level (for the
         # keeper-identity check below), rolled up per fp (the
         # within-batch keeper = min doc_id, matching exact_dedup);
@@ -1080,8 +1036,6 @@ class CrawlEngine:
             }
         fp_buckets = [int(r["b"]) for r in arows]
         corpus_fp = self._pruned_table("doc_fps", fp_buckets)
-        if corpus_fp is None:
-            corpus_fp = self.doc_fps
         # known fps: stream the (pruned) corpus past the broadcast
         # batch keys — the delta-sized result then BROADCASTS into the
         # anti join below (the corpus itself is never the build side)
@@ -1143,8 +1097,6 @@ class CrawlEngine:
         # keepers; everything else in the batch is an exact dup
         n_dup = n_docs - n_new_fp - n_self
         corpus_b = self._pruned_table("doc_bands", band_buckets)
-        if corpus_b is None:
-            corpus_b = self.doc_bands
         cross = nb.join(
             corpus_b.select(
                 F.col("doc_id").alias("_cid"), "band", "key"
@@ -1234,8 +1186,6 @@ class CrawlEngine:
             # commit composes dirty buckets as (base anti old-rows)
             # union merged-rows — the full table is never scanned.
             corpus_l = self._pruned_table("doc_lines", line_buckets)
-            if corpus_l is None:
-                corpus_l = self.doc_lines
             hits_l = corpus_l.join(
                 blc.select("fp"), "fp", "left_semi"
             ).localCheckpoint(eager=False)
@@ -1316,51 +1266,40 @@ class CrawlEngine:
         self.visits = v
         return sum(s for _, s in bucket_rows)
 
-    def _pruned_table(self, name: str, buckets) -> DataFrame | None:
-        """Partition-pruned read of `name`'s committed snapshot,
-        restricted to `buckets` — valid ONLY while the in-memory frame
-        still equals the snapshot (no dirty buckets, no pendings: the
-        start-of-epoch state every _commit restores). Returns None
-        when that doesn't hold (or no snapshot exists); callers fall
-        back to the full in-memory frame. This is what keeps the
-        epoch's nodes/edges/visits lookups O(|touched buckets|)
-        instead of O(|store|) — the DataFrame re-expression of the
-        reference's keyIndex point reads (database.go:179-210)."""
+    def _pruned_table(self, name: str, buckets) -> DataFrame:
+        """`name`'s rows in `buckets`, for an epoch lookup: a
+        partition-pruned read of the committed snapshot while the
+        in-memory frame still equals it (no dirty buckets, no
+        pendings: the start-of-epoch state every _commit restores),
+        else the in-memory frame itself, which callers' joins filter.
+        The pruned form is what keeps the epoch's nodes/edges/visits/
+        dedup lookups O(|touched buckets|) instead of O(|store|) — the
+        DataFrame re-expression of the reference's keyIndex point
+        reads (database.go:179-210)."""
+        frame = getattr(self, name)
         dirty = self._dirty[name]
         if dirty is None or dirty or self._pending.get(name):
-            return None
-        if getattr(self, name, None) is not self._snap_frames.get(name):
+            return frame
+        if frame is not self._snap_frames.get(name):
             # the frame was replaced since the last load (caller
             # mutation, arbiter flip) without a dirty mark — the
             # snapshot no longer speaks for it
-            return None
+            return frame
         cur = self.cat.current(name)
         if cur is None:
-            return None
+            return frame
         base = self._snap_reads.get(cur.path)
         if base is None:
             try:
                 base = self._read_snapshot(name, cur.path)
             except Exception:  # empty snapshot: no parquet parts
-                return None
+                return frame
             self._snap_reads[cur.path] = base
         if "bucket" not in base.columns:
-            return None
+            return frame
         return base.filter(
             F.col("bucket").isin(sorted({int(b) for b in buckets}))
         ).drop("bucket")
-
-    def _visits_index(self, node_buckets) -> DataFrame:
-        """The (node_id, walk_id) inverted index restricted to the
-        given node buckets: a PARTITION-PRUNED read of the committed
-        snapshot when the in-memory index matches it (the
-        start-of-epoch state), else the in-memory index (operators
-        filter it themselves). The pruned form is what makes repair
-        selection O(|delta buckets|) instead of O(|index|)."""
-        base = self._pruned_table("visits", node_buckets)
-        if base is not None:
-            return base.select("node_id", "walk_id")
-        return self.visits
 
     def maybe_arbiter(self, now: _dt.datetime) -> dict:
         """A8 trigger + M11 scan (arbiter.go:55-81). The trigger reads
@@ -1483,15 +1422,12 @@ class CrawlEngine:
         """Rank read served from the MAINTAINED state — the visits
         inverted index and the totalVisits counter (reference rank
         reads are SCards + one HGet, pagerank.go:17-44; never a walk-
-        store re-derivation). Falls back to the store scan only when
-        the index was never built (pre-bootstrap)."""
+        store re-derivation)."""
         from .rank import global_pagerank
 
-        if self.visits is not None:
-            return global_pagerank(
-                self.walks,
-                nodes=self.nodes,
-                visits=self.visits,
-                total=self.total_visits,
-            )
-        return global_pagerank(self.walks, nodes=self.nodes)
+        return global_pagerank(
+            self.walks,
+            nodes=self.nodes,
+            visits=self.visits,
+            total=self.total_visits,
+        )

@@ -136,13 +136,11 @@ def schedule_batch(
     blocked = None
     delay = F.lit(default_crawl_delay_s)
     if robots is not None:
-        blocked = (
-            robots_verdicts(
-                queued.select("url"), robots.select("host", "allow", "pattern")
-            )
-            .filter(~F.col("allowed"))
-            .select("url")
+        # blocked: the urls whose winning rule is a Disallow
+        _, best = _robots_best_rule(
+            queued.select("url"), robots.select("host", "allow", "pattern")
         )
+        blocked = best.filter(~F.col("_allow")).select("url")
         queued = queued.join(blocked, "url", "left_anti")
         if "crawl_delay_s" in robots.columns:
             delays = robots.groupBy("host").agg(
@@ -441,6 +439,24 @@ def robots_verdicts(
     one regex match per (url, host-rule), and a per-url window on the
     few matching rules. No shuffle of the frontier beyond the window
     on url."""
+    base, best = _robots_best_rule(urls, rules)
+    return (
+        base.join(best, "url", "left")
+        .select(
+            "url",
+            "host",
+            F.coalesce("_allow", F.lit(True)).alias("allowed"),
+            "matched_rule",
+        )
+    )
+
+
+def _robots_best_rule(urls: DataFrame, rules: DataFrame):
+    """(base, best) for robots_verdicts: `base` is (url, host, _path)
+    per input url; `best` is (url, _allow, matched_rule), one row per
+    url that some non-empty rule of its host matches — the winner by
+    longest pattern, allow on ties, then pattern. Urls absent from
+    `best` are allowed by default."""
     path_raw = F.regexp_replace("url", r"^[A-Za-z][A-Za-z0-9+.\-]*://[^/]*", "")
     base = urls.select(
         "url",
@@ -468,15 +484,7 @@ def robots_verdicts(
         .filter(F.col("_rn") == 1)
         .select("url", F.col("allow").alias("_allow"), F.col("pattern").alias("matched_rule"))
     )
-    return (
-        base.join(best, "url", "left")
-        .select(
-            "url",
-            "host",
-            F.coalesce("_allow", F.lit(True)).alias("allowed"),
-            "matched_rule",
-        )
-    )
+    return base, best
 
 
 def _parse_robots_one(text: str, user_agent: str) -> list:

@@ -228,7 +228,8 @@ def url_spam_score(col) -> "F.Column":
     for w in URL_SOFT_WORDS:
         score = score + F.when(u.contains(w), F.lit(1)).otherwise(F.lit(0))
     n_digits = F.length(F.regexp_replace(u, "[^0-9]", ""))
-    tail = F.length(u) - F.length(url_host(u))
+    # path+query: after the authority, up to any fragment
+    tail = F.length(F.regexp_extract(u, r"^https?://[^/?#]+([^#]*)", 1))
     return (
         score
         + F.when(n_digits > 4, F.lit(1)).otherwise(F.lit(0))

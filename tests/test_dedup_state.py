@@ -373,9 +373,10 @@ def test_resume_survives_torn_first_adoption(spark, tmp_path):
     web = _web(spark)
     root = str(tmp_path / "first")
     eng = _mk(spark, root)
-    eng.dedup_state = False  # pre-adoption store: no dedup commits
     eng.bootstrap([datagen.node_url(i) for i in (0, 1, 2)], NOW)
     _run_epochs(eng, web, 2)
+    # pre-adoption store: retire every doc_fps snapshot
+    eng.cat.rollback("doc_fps", None)
 
     # torn first-adoption commit: doc_fps exists ONLY at epoch 3
     orphan = spark.createDataFrame(

@@ -243,10 +243,14 @@ def test_mint_and_arbiter_flip_same_epoch_commit(spark, tmp_path, monkeypatch):
 
 def test_resume_from_checkpoint(spark, tmp_path):
     eng1, order1, _ = _run(spark, tmp_path, "resume", epochs=2)
+    # every commit, bootstrap's included, writes all nine tables
+    for tab in engine._TABLES:
+        assert eng1.cat.current(tab).epoch == eng1.epoch, tab
     # a second engine resumes from the same catalog root
     eng2 = _mk(spark, tmp_path, "resume")
     eng2.resume()
     assert eng2.epoch == eng1.epoch
+    assert all(getattr(eng2, tab) is not None for tab in engine._TABLES)
     for tab in ("nodes", "edges", "walks", "frontier"):
         a = getattr(eng1, tab)
         b = getattr(eng2, tab)
@@ -256,35 +260,6 @@ def test_resume_from_checkpoint(spark, tmp_path):
     s = eng2.run_epoch(web, NOW + dt.timedelta(minutes=30))
     assert s["scheduled"] >= 0
     assert eng2.epoch == eng1.epoch + 1
-
-
-def test_standalone_process_pages_never_remints_existing_ids(spark, tmp_path):
-    """A caller that assigns engine state directly (no bootstrap/
-    resume) still gets collision-free minting: the counter guard
-    derives next_node_id from the assigned nodes before the first
-    mint (minting passes start_id + known_new and would otherwise
-    start at 0, aliasing a discovered url with an existing node)."""
-    eng = _mk(spark, tmp_path, "standalone")
-    eng.nodes = spark.createDataFrame(
-        [
-            (0, datagen.node_url(0), "active", NOW, None, None),
-            (1, datagen.node_url(1), "active", NOW, None, None),
-        ],
-        "node_id long, url string, status string, added_ts timestamp, "
-        "promoted_ts timestamp, demoted_ts timestamp",
-    )
-    eng.edges = spark.createDataFrame([], "src long, dst long")
-    eng.walks = spark.createDataFrame(
-        [(0, 0, [0]), (1, 1, [1])],
-        "walk_id long, start_id long, path array<long>",
-    )
-    eng.epoch += 1
-    s = eng.process_pages(datagen.pages_df(spark, {0: [1, 5]}), NOW)
-    assert s["new_nodes"] == 1
-    ids = {r["url"]: r["node_id"] for r in eng.nodes.collect()}
-    assert len(set(ids.values())) == len(ids)  # no aliased ids
-    assert ids[datagen.node_url(5)] == 2
-    assert eng.next_node_id == 3
 
 
 def test_run_epoch_with_robots_rules(spark, tmp_path):

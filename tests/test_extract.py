@@ -148,6 +148,8 @@ def test_url_spam_score_and_filter(spark):
         ("https://evil.test/",),                         # blocked (exact)
         ("ftp://bad.test/x",),                           # invalid
         ("https://num.test/p/1234567890",),              # digits -> +1 only
+        ("https://long.test/" + "x" * 115,),             # path+query 116
+        ("https://long.test/" + "x" * 121,),             # path+query 122
     ]
     urls = spark.createDataFrame(rows, "url string")
     blocked = spark.createDataFrame([("evil.test",)], "domain string")
@@ -164,6 +166,9 @@ def test_url_spam_score_and_filter(spark):
     assert got["https://evil.test/"][:2] == (False, "blocked_domain")
     assert got["ftp://bad.test/x"][:2] == (False, "invalid")
     assert got["https://num.test/p/1234567890"] == (True, None, 1)
+    # the length bump counts path+query only, never scheme or host
+    assert got["https://long.test/" + "x" * 115] == (True, None, 0)
+    assert got["https://long.test/" + "x" * 121] == (True, None, 1)
     # no blocklist: everything valid + under-threshold keeps
     got2 = {
         r["url"]: r["keep"]

@@ -218,6 +218,28 @@ def test_graft_sample_zero_limits_short_circuits(spark):
     assert "WindowGroupLimit" not in out._jdf.queryExecution().executedPlan().toString()
 
 
+def _queued_frontier(spark, n):
+    """`n` queued frontier rows over 3 hosts, priorities 0-6."""
+    import datetime as dt
+
+    return spark.createDataFrame(
+        [
+            (
+                f"https://h{i % 3}.test/p{i}",
+                f"h{i % 3}.test",
+                None,
+                float(i % 7),
+                dt.datetime(2025, 1, 1),
+                None,
+                "queued",
+            )
+            for i in range(n)
+        ],
+        "url string, host string, node_id long, priority double, "
+        "enqueued_ts timestamp, fetched_ts timestamp, state string",
+    )
+
+
 def test_schedule_window_is_group_limited_pre_shuffle(spark):
     """Plan gate for the scheduler's politeness window: the per-host
     budget is a COLUMN (invisible to the WindowGroupLimit rewrite), so
@@ -230,29 +252,44 @@ def test_schedule_window_is_group_limited_pre_shuffle(spark):
 
     from crawler_spark import frontier
 
-    rows = [
-        (
-            f"https://h{i % 3}.test/p{i}",
-            f"h{i % 3}.test",
-            None,
-            float(i % 7),
-            dt.datetime(2025, 1, 1),
-            None,
-            "queued",
-        )
-        for i in range(200)
-    ]
-    fr = spark.createDataFrame(
-        rows,
-        "url string, host string, node_id long, priority double, "
-        "enqueued_ts timestamp, fetched_ts timestamp, state string",
-    )
+    fr = _queued_frontier(spark, 200)
     batch, _ = frontier.schedule_batch(
         fr, None, dt.datetime(2025, 1, 2), tick_seconds=600.0, batch_size=50
     )
     p = _plan(batch)
     assert "WindowGroupLimit" in p and "Partial" in p
     assert batch.count() == 50
+
+
+def test_schedule_blocked_set_reads_the_best_rule_window(spark):
+    """With a robots rule set, the blocked urls come straight from the
+    per-url best-rule window (winning rule is a Disallow): the queued
+    urls exchange on url once for that window and once for the
+    left_anti that drops the blocked ones. Joining the queued urls
+    back onto the window (robots_verdicts' verdict form) would add a
+    third url exchange for rows the window already carries."""
+    import datetime as dt
+
+    from crawler_spark import frontier
+
+    fr = _queued_frontier(spark, 300)
+    rules = spark.createDataFrame(
+        [("h0.test", False, "/p1*"), ("h0.test", True, "/p10*"),
+         ("h1.test", False, "/*")],
+        "host string, allow boolean, pattern string",
+    )
+    batch, fr2 = frontier.schedule_batch(
+        fr, rules, dt.datetime(2025, 1, 2), tick_seconds=600.0, batch_size=50
+    )
+    assert _plan(batch).count("Exchange hashpartitioning(url") == 2
+    want = {
+        r.url
+        for r in frontier.robots_verdicts(fr.select("url"), rules)
+        .filter(~F.col("allowed"))
+        .collect()
+    }
+    got = {r.url for r in fr2.filter(F.col("state") == "blocked").collect()}
+    assert got == want and len(want) == 133
 
 
 def test_anchor_topk_is_group_limited_pre_shuffle(spark):

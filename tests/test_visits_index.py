@@ -141,7 +141,8 @@ def test_epoch_lookups_are_partition_pruned(spark, tmp_path, monkeypatch):
     exact-verify, target resolution, old-adjacency fetch) read the
     committed snapshot PARTITION-PRUNED to the batch's buckets — the
     DataFrame form of the reference's keyIndex point reads — and the
-    epoch end-state is bit-identical to the unpruned fallback."""
+    epoch end-state is bit-identical to the unpruned in-memory
+    frames."""
     web = datagen.pages_df(spark, {0: [1, 5], 1: [2]})
 
     engA = _mk(spark, tmp_path, "pruneA")
@@ -151,16 +152,18 @@ def test_epoch_lookups_are_partition_pruned(spark, tmp_path, monkeypatch):
 
     def spy(self, name, buckets):
         out = orig(self, name, buckets)
-        calls.append((name, out))
+        # a pruned read is a new frame; the unpruned form is the
+        # in-memory frame itself
+        calls.append((name, out, out is not getattr(self, name)))
         return out
 
     monkeypatch.setattr(engine.CrawlEngine, "_pruned_table", spy)
     sA = engA.run_epoch(web, NOW + dt.timedelta(minutes=1))
     monkeypatch.undo()
-    pruned = {n for n, out in calls if out is not None}
+    pruned = {n for n, _, is_pruned in calls if is_pruned}
     assert "nodes" in pruned and "edges" in pruned
-    for name, out in calls:
-        if out is None:
+    for name, out, is_pruned in calls:
+        if not is_pruned:
             continue
         plan = out._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan and "bucket" in plan, name
@@ -168,7 +171,9 @@ def test_epoch_lookups_are_partition_pruned(spark, tmp_path, monkeypatch):
     engB = _mk(spark, tmp_path, "pruneB")
     engB.bootstrap([datagen.node_url(i) for i in (0, 1, 2)], NOW)
     monkeypatch.setattr(
-        engine.CrawlEngine, "_pruned_table", lambda self, name, buckets: None
+        engine.CrawlEngine,
+        "_pruned_table",
+        lambda self, name, buckets: getattr(self, name),
     )
     sB = engB.run_epoch(web, NOW + dt.timedelta(minutes=1))
     monkeypatch.undo()
