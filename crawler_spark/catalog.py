@@ -175,31 +175,14 @@ class Catalog:
         commit point, so a crash mid-write leaves the previous
         snapshot intact (resume-safe)."""
         snaps = self._load_manifest(table)
-        version = (snaps[-1]["version"] + 1) if snaps else 0
-        vdir = os.path.join(self.root, table, f"v{version:04d}")
-        if os.path.exists(vdir):  # orphan of a crashed rollback
-            shutil.rmtree(vdir, ignore_errors=True)
+        version, vdir = self._new_version_dir(table, snaps)
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(vdir)
-        self._ensure_readable(vdir, df)
-
-        files, n_rows = self._scan_committed(vdir)
-
-        snap = Snapshot(
-            version=version,
-            path=vdir,
-            epoch=epoch,
-            n_rows=n_rows,
-            created_unix=time.time(),
-            files=files,
-            metrics=metrics or {},
+        return self._seal(
+            table, snaps, version, vdir, df, epoch, metrics or {}, keep_versions
         )
-        snaps.append(snap.__dict__)
-        self._commit_manifest(table, snaps)
-        self._vacuum(table, snaps, keep_versions)
-        return snap
 
     def write_partial(
         self,
@@ -231,10 +214,7 @@ class Catalog:
         # base = last SERVABLE snapshot; version allocated past the
         # highest manifest version (rolled back or not) — never reused
         prev_dir = active[-1]["path"]
-        version = snaps[-1]["version"] + 1
-        vdir = os.path.join(self.root, table, f"v{version:04d}")
-        if os.path.exists(vdir):  # orphan of a crashed rollback
-            shutil.rmtree(vdir, ignore_errors=True)
+        version, vdir = self._new_version_dir(table, snaps)
         changed = sorted(set(int(b) for b in changed_buckets))
         if changed:
             (
@@ -260,11 +240,36 @@ class Catalog:
                             os.path.join(src_dir, fn),
                             os.path.join(dst_dir, fn),
                         )
-        self._ensure_readable(vdir, df)
-
-        files, n_rows = self._scan_committed(vdir)
         m = dict(metrics or {})
         m["changed_buckets"] = changed
+        return self._seal(table, snaps, version, vdir, df, epoch, m, keep_versions)
+
+    def _new_version_dir(self, table: str, snaps: list[dict]) -> tuple[int, str]:
+        """Allocate the next version past the highest manifest
+        version (rolled back or not — never reused) and clear its dir
+        if an orphan of a crashed rollback still holds it."""
+        version = (snaps[-1]["version"] + 1) if snaps else 0
+        vdir = os.path.join(self.root, table, f"v{version:04d}")
+        if os.path.exists(vdir):
+            shutil.rmtree(vdir, ignore_errors=True)
+        return version, vdir
+
+    def _seal(
+        self,
+        table: str,
+        snaps: list[dict],
+        version: int,
+        vdir: str,
+        df: DataFrame,
+        epoch: int,
+        metrics: dict,
+        keep_versions: int,
+    ) -> Snapshot:
+        """The shared commit tail of write/write_partial: make the
+        written dir readable, record its files, and commit the
+        manifest (the commit point), then vacuum old versions."""
+        self._ensure_readable(vdir, df)
+        files, n_rows = self._scan_committed(vdir)
         snap = Snapshot(
             version=version,
             path=vdir,
@@ -272,7 +277,7 @@ class Catalog:
             n_rows=n_rows,
             created_unix=time.time(),
             files=files,
-            metrics=m,
+            metrics=metrics,
         )
         snaps.append(snap.__dict__)
         self._commit_manifest(table, snaps)

@@ -71,6 +71,7 @@ epoch. Every epoch method assumes one of the two ran first.
 from __future__ import annotations
 
 import datetime as _dt
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -925,54 +926,15 @@ class CrawlEngine:
                 strategy=self.walk_strategy,
                 visits=self._pruned_table("visits", delta_buckets),
             )
-            # the updated rows (with old_path) materialize once and
-            # feed everything delta-shaped below. ONE tagged action
-            # returns the repaired-walk buckets AND the visits-index
-            # bucket/counter deltas together (previously: checkpoint +
-            # walk-bucket collect + visits-bucket collect)
+            # the updated rows (with old_path) materialize once, in the
+            # walk-delta action, and feed everything delta-shaped below
             upd = repaired.filter(F.col("updated")).localCheckpoint(
                 eager=False
             )
-            vis_rm, vis_add = walks_update.visit_deltas(upd)
-            _urows = (
-                upd.select(
-                    self._bucket_of("walk_id").alias("b"),
-                    F.lit(0).alias("k"),
-                    F.lit(0).alias("d"),
-                )
-                .unionByName(
-                    vis_rm.select(
-                        self._bucket_of("node_id").alias("b"),
-                        F.lit(1).alias("k"),
-                        F.lit(-1).alias("d"),
-                    )
-                )
-                .unionByName(
-                    vis_add.select(
-                        self._bucket_of("node_id").alias("b"),
-                        F.lit(1).alias("k"),
-                        F.lit(1).alias("d"),
-                    )
-                )
-                .groupBy("k", "b")
-                .agg(F.count("*").alias("n"), F.sum("d").alias("s"))
-                .collect()
-            )
-            n_up = sum(int(r["n"]) for r in _urows if int(r["k"]) == 0)
-            self._mark_dirty("walks", (r["b"] for r in _urows if int(r["k"]) == 0))
-            self._pend(
-                "walks",
+            n_up = self._apply_walk_delta(
                 upd.select("walk_id"),
                 upd.select("walk_id", "start_id", "path"),
-            )
-            self.total_visits += self._apply_visits_delta(
-                vis_rm,
-                vis_add,
-                bucket_rows=[
-                    (int(r["b"]), int(r["s"] or 0))
-                    for r in _urows
-                    if int(r["k"]) == 1
-                ],
+                *walks_update.visit_deltas(upd),
             )
             self.walks = walks_update.finish_update(repaired)
             self.walks_changed += n_up
@@ -1214,42 +1176,61 @@ class CrawlEngine:
             "line_fps": n_line_fps,
         }
 
-    def _apply_visits_delta(
+    def _apply_walk_delta(
         self,
+        rm_ids: DataFrame | None,
+        add_rows: DataFrame | None,
         vis_rm: DataFrame | None,
         vis_add: DataFrame | None,
-        bucket_rows: list[tuple[int, int]] | None = None,
     ) -> int:
-        """Maintain the visits inverted index from a (node_id, walk_id)
-        delta — the store.go:337-358,442-465 transactional update, in
-        ONE place for the repair and arbiter paths: mark dirty node
-        buckets, register the delta-composed commit pair, splice the
-        in-memory index, and return the signed pair-count delta
-        (== Δ totalVisits: walks stop on cycles, so a path never
-        repeats a node and pair count equals Σ size(path)). One action
-        yields the buckets AND the counter delta — or zero actions
-        when the caller already folded them into its own multi-
-        aggregate and passes `bucket_rows` [(bucket, signed_sum)]."""
-        if bucket_rows is None:
-            parts = []
-            if vis_rm is not None:
-                parts.append(vis_rm.select("node_id", F.lit(-1).alias("d")))
-            if vis_add is not None:
-                parts.append(vis_add.select("node_id", F.lit(1).alias("d")))
-            if not parts:
-                return 0
-            alld = parts[0]
-            for p in parts[1:]:
-                alld = alld.unionByName(p)
-            bucket_rows = [
-                (int(r["b"]), int(r["s"] or 0))
-                for r in alld.groupBy(self._bucket_of("node_id").alias("b"))
-                .agg(F.sum("d").alias("s"))
-                .collect()
-            ]
-        elif vis_rm is None and vis_add is None:
-            return 0
-        self._mark_dirty("visits", (b for b, _ in bucket_rows))
+        """Register one walk-store change — the store.go:337-358,
+        442-465 transactional update, in ONE place for prune/graft
+        repair and the arbiter's promote/demote. Inputs: the walks
+        leaving (walk_id), the walks entering (walk_id, start_id,
+        path), and the (node_id, walk_id) visits pairs they remove and
+        add; any may be None. ONE groupBy(k, b) action over the tagged
+        union yields the walk dirty buckets, the entering walks' count
+        and highest walk_id (bumping next_walk_id), and the visits
+        dirty buckets with the signed pair-count delta (== Δ
+        totalVisits: walks stop on cycles, so a path never repeats a
+        node and pair count equals Σ size(path)). Then the dirty
+        buckets are marked, both tables' delta-composed commit pairs
+        registered and the in-memory visits index spliced. Returns
+        the number of entering walks."""
+        no_id = F.lit(None).cast("long")
+        tagged = (
+            (rm_ids, 0, "walk_id", 0, no_id),
+            (add_rows, 0, "walk_id", 1, F.col("walk_id")),
+            (vis_rm, 1, "node_id", -1, no_id),
+            (vis_add, 1, "node_id", 1, no_id),
+        )
+        rows = (
+            reduce(
+                DataFrame.unionByName,
+                (
+                    df.select(
+                        F.lit(k).alias("k"),
+                        self._bucket_of(key).alias("b"),
+                        F.lit(d).alias("d"),
+                        w.alias("w"),
+                    )
+                    for df, k, key, d, w in tagged
+                    if df is not None
+                ),
+            )
+            .groupBy("k", "b")
+            .agg(F.sum("d").alias("s"), F.max("w").alias("mx"))
+            .collect()
+        )
+        walk_rows = [r for r in rows if r["k"] == 0]
+        vis_rows = [r for r in rows if r["k"] == 1]
+        ids = [int(r["mx"]) for r in walk_rows if r["mx"] is not None]
+        if ids:
+            self.next_walk_id = max(self.next_walk_id, max(ids) + 1)
+        self.total_visits += sum(int(r["s"]) for r in vis_rows)
+        self._mark_dirty("walks", (r["b"] for r in walk_rows))
+        self._mark_dirty("visits", (r["b"] for r in vis_rows))
+        self._pend("walks", rm_ids, add_rows)
         self._pend(
             "visits",
             vis_rm.select("node_id", "walk_id") if vis_rm is not None else None,
@@ -1264,7 +1245,7 @@ class CrawlEngine:
         if vis_add is not None:
             v = v.unionByName(vis_add.select("node_id", "walk_id"))
         self.visits = v
-        return sum(s for _, s in bucket_rows)
+        return sum(int(r["s"]) for r in walk_rows)
 
     def _pruned_table(self, name: str, buckets) -> DataFrame:
         """`name`'s rows in `buckets`, for an epoch lookup: a
@@ -1305,15 +1286,23 @@ class CrawlEngine:
         """A8 trigger + M11 scan (arbiter.go:55-81). The trigger reads
         the incrementally-maintained totalVisits counter (the
         reference's RWS hash field) — no per-epoch store scan; the
-        scan itself derives visit counts from the maintained index."""
+        scan itself derives visit counts from the maintained index.
+
+        A pass that flips nodes commits at bucket granularity like
+        every other epoch: the flipped rows are projections of the
+        decisions checkpoint, and the removed/generated walks go
+        through _apply_walk_delta, whose one action materializes
+        their (lazy) checkpoints and yields the walk and visits
+        buckets. Decision counts and the flipped and promoted url
+        buckets come from apply_arbiter's one decision action."""
         total = self.total_visits
         ratio = frontier_mod.change_ratio(self.walks_changed, total, self.alpha)
         if ratio < schemas.ARBITER_ACTIVATION_THRESHOLD:
             return {"arbiter": 0, "change_ratio": ratio}
         # materialize ONCE: decisions is nodes ⋈ an aggregation over
-        # the whole visits index, and ~6 downstream actions (counts
-        # collect, removed/added/flipped checkpoints, promoted
-        # enqueue) would each re-run that aggregation from lineage
+        # the whole visits index, and every downstream action (the
+        # decision collect, the walk-delta action, the promoted
+        # enqueue, the nodes commit) would re-run that aggregation
         decisions = frontier_mod.arbiter_decisions(
             self.nodes,
             self.walks,
@@ -1325,7 +1314,6 @@ class CrawlEngine:
         self.nodes, self.walks, promoted, cnts, delta = (
             frontier_mod.apply_arbiter(
                 self.spark,
-                self.nodes,
                 self.walks,
                 self.edges,
                 decisions,
@@ -1342,56 +1330,24 @@ class CrawlEngine:
         )
         n_promoted = cnts.get("promote", 0)
         if n_promoted or cnts.get("demote", 0):
-            # BUCKET-SCOPED arbiter commit: the touched buckets are
-            # computable — flipped nodes' url buckets, removed walks'
-            # id buckets, generated walks' id buckets, and both sides'
-            # exploded node buckets for the visits index. Each delta
-            # set is checkpointed (delta-sized) and registered for the
-            # delta-composed partial commit; untouched buckets
-            # hardlink as in every other epoch.
-            removed = delta["removed_walks"]
-            added = delta["added_walks"]
-            if removed is not None:
-                removed = removed.localCheckpoint(eager=True)
-            if added is not None:
-                added = added.localCheckpoint(eager=True)
-            flipped_new = delta["flipped_new"].localCheckpoint(eager=True)
-            flipped_ids = (
-                delta["flipped_old"]
-                .select("node_id")
-                .localCheckpoint(eager=True)
-            )
-            self._mark_dirty("nodes", delta["node_buckets"] or [])
-            self._pend("nodes", flipped_ids, flipped_new)
-            for wdf, is_add in ((removed, False), (added, True)):
-                if wdf is None:
-                    continue
-                rows = (
-                    wdf.groupBy(self._bucket_of("walk_id").alias("b"))
-                    .agg(F.max("walk_id").alias("mx"))
-                    .collect()
-                )
-                self._mark_dirty("walks", (r["b"] for r in rows))
-                if is_add and rows:
-                    self.next_walk_id = max(
-                        self.next_walk_id,
-                        max(int(r["mx"]) for r in rows) + 1,
-                    )
-            self._pend(
-                "walks",
-                removed.select("walk_id") if removed is not None else None,
-                added,
+            flipped = delta["flipped_new"]
+            self._mark_dirty("nodes", delta["node_buckets"])
+            self._pend("nodes", flipped.select("node_id"), flipped)
+            removed, added = (
+                w if w is None else w.localCheckpoint(eager=False)
+                for w in (delta["removed_walks"], delta["added_walks"])
             )
             # inline explode (not walks_gen.visits_of): the no-scan
             # gate poisons visits_of to catch full-STORE derivations,
             # and these are delta frames
-            self.total_visits += self._apply_visits_delta(
-                removed.select(F.explode("path").alias("node_id"), "walk_id")
-                if removed is not None
-                else None,
-                added.select(F.explode("path").alias("node_id"), "walk_id")
-                if added is not None
-                else None,
+            self._apply_walk_delta(
+                removed if removed is None else removed.select("walk_id"),
+                added,
+                *(
+                    w if w is None
+                    else w.select(F.explode("path").alias("node_id"), "walk_id")
+                    for w in (removed, added)
+                ),
             )
         if n_promoted:
             self.frontier = frontier_mod.enqueue(
@@ -1400,19 +1356,7 @@ class CrawlEngine:
             # seen.url_bucket == pmod(xxhash64(host(url)), B) — the
             # SAME definition _host_bucket applies to the frontier's
             # host column at commit time (one definition, two spots)
-            self._mark_dirty(
-                "frontier",
-                (
-                    r["b"]
-                    for r in promoted.select(
-                        seen.url_bucket(F.col("url"), self.n_buckets)
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                ),
-            )
+            self._mark_dirty("frontier", delta["promoted_buckets"])
         self.walks_changed = 0
         return {"arbiter": 1, "promoted": n_promoted, "change_ratio": ratio}
 

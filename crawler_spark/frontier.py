@@ -35,12 +35,7 @@ from pyspark.sql import functions as F
 
 from . import schemas
 from .functions.extract import url_filter, url_host
-from .walks_gen import (
-    generate_walks,
-    next_walk_id,
-    remove_walks_starting_at,
-    visit_counts,
-)
+from .walks_gen import generate_walks, remove_walks_starting_at, visit_counts
 
 DEFAULT_CRAWL_DELAY_S = 1.0
 DEFAULT_BATCH = schemas.DEFAULT_QUERY_BATCH  # 50, crawler.go:120
@@ -50,7 +45,6 @@ def enqueue(
     frontier: DataFrame | None,
     urls: DataFrame,
     now: _dt.datetime,
-    spark: SparkSession | None = None,
     url_gate: dict | None = None,
 ) -> DataFrame:
     """Add (url, node_id?) rows to the frontier in state 'queued'.
@@ -256,7 +250,6 @@ def arbiter_decisions(
 
 def apply_arbiter(
     spark: SparkSession,
-    nodes: DataFrame,
     walks: DataFrame,
     edges: DataFrame,
     decisions: DataFrame,
@@ -265,63 +258,57 @@ def apply_arbiter(
     walks_per_node: int = schemas.DEFAULT_WALKS_PER_NODE,
     seed: int = 42,
     strategy: str = "auto",
-    walk_id_offset: int | None = None,
-    node_bucket_expr=None,
+    *,
+    walk_id_offset: int,
+    node_bucket_expr,
 ) -> tuple[DataFrame, DataFrame, DataFrame, dict, dict]:
     """Bulk PromoteNode/DemoteNode (arbiter.go:192-228): returns
     (nodes', walks', promoted nodes, decision counts, delta). Promotion
     generates walks_per_node walks per promoted node in ONE job (vs
-    the reference's per-node loop); demotion drops walks originating
-    at demoted nodes in one anti-join.
+    the reference's per-node loop), numbered from `walk_id_offset`
+    (the engine's lastWalkID counter, store.go:331-340); demotion
+    drops walks originating at demoted nodes in one anti-join.
 
-    ONE driver action sizes both branches (the former pair of
-    limit(1).count() probes plus the caller's promoted.count() were
-    three needless job launches per arbiter pass in the epoch loop);
-    the counts let the engine skip full-table commits when a pass
-    flips nothing. With `node_bucket_expr` (a column expr over the
-    node rows) the same action also yields `delta['node_buckets']` —
-    the url buckets of flipped nodes, feeding bucket-scoped commits.
+    `decisions` (arbiter_decisions' output) holds every node row, so
+    nodes' is `decisions` with the flip rule applied — written once,
+    as one {status, promoted_ts, demoted_ts} expression map.
 
-    `walk_id_offset`: the engine tracks lastWalkID incrementally (the
-    reference's RWS counter, store.go:331-340); when absent it is
-    recomputed with a max() scan of the store.
+    ONE driver action over `decisions` yields the decision counts
+    and, via `node_bucket_expr` (a column expr over the node rows),
+    the url buckets of the flipped nodes (`delta['node_buckets']`)
+    and of the promoted ones (`delta['promoted_buckets']`), feeding
+    bucket-scoped commits. The counts let the engine skip the delta
+    work when a pass flips nothing.
 
-    `delta` carries the change sets a maintained visits index /
+    `delta` also carries the change sets a maintained visits index /
     bucket-scoped commit needs: `removed_walks` (full rows of walks
-    dropped by demotion), `added_walks` (the generated rows), and the
-    flipped node rows before/after (`flipped_old`/`flipped_new`)."""
-    promoted = decisions.filter(F.col("decision") == "promote").select(
-        "node_id", "url"
+    dropped by demotion), `added_walks` (the generated rows) and
+    `flipped_new` (the flipped node rows of nodes'); each is None
+    when the pass has nothing of its kind."""
+    rows = (
+        decisions.groupBy("decision")
+        .agg(
+            F.count("*").alias("n"),
+            F.collect_set(node_bucket_expr.cast("int")).alias("bs"),
+        )
+        .collect()
     )
-    demoted = decisions.filter(F.col("decision") == "demote").select("node_id")
-    if node_bucket_expr is not None:
-        rows = (
-            decisions.groupBy("decision")
-            .agg(
-                F.count("*").alias("n"),
-                F.collect_set(node_bucket_expr.cast("int")).alias("bs"),
-            )
-            .collect()
-        )
-        cnts = {r["decision"]: int(r["n"]) for r in rows}
-        node_buckets = sorted(
-            {int(b) for r in rows if r["decision"] != "keep" for b in r["bs"]}
-        )
-    else:
-        rows = decisions.groupBy("decision").agg(F.count("*").alias("n")).collect()
-        cnts = {r["decision"]: int(r["n"]) for r in rows}
-        node_buckets = None
-    n_promoted = cnts.get("promote", 0)
+    cnts = {r["decision"]: int(r["n"]) for r in rows}
+    buckets = {r["decision"]: {int(b) for b in r["bs"]} for r in rows}
+    promoted_buckets = buckets.get("promote", set())
     delta: dict = {
         "removed_walks": None,
         "added_walks": None,
-        "flipped_old": None,
         "flipped_new": None,
-        "node_buckets": node_buckets,
+        "node_buckets": sorted(promoted_buckets | buckets.get("demote", set())),
+        "promoted_buckets": sorted(promoted_buckets),
     }
-
+    promote = F.col("decision") == "promote"
+    demote = F.col("decision") == "demote"
+    promoted = decisions.filter(promote).select("node_id", "url")
     new_walks = walks
     if cnts.get("demote", 0):
+        demoted = decisions.filter(demote).select("node_id")
         # full rows of the dropped walks (start_id is the walk's
         # origin by construction): the caller's visits delta and
         # dirty-bucket sets derive from them without re-scanning
@@ -334,7 +321,7 @@ def apply_arbiter(
             "left_semi",
         ).select("walk_id", "start_id", "path")
         new_walks = remove_walks_starting_at(new_walks, demoted)
-    if n_promoted:
+    if cnts.get("promote", 0):
         gen = generate_walks(
             spark,
             edges,
@@ -342,60 +329,28 @@ def apply_arbiter(
             alpha=alpha,
             walks_per_node=walks_per_node,
             seed=seed,
-            walk_id_offset=(
-                walk_id_offset
-                if walk_id_offset is not None
-                else next_walk_id(walks)
-            ),
+            walk_id_offset=walk_id_offset,
             strategy=strategy,
         )
         delta["added_walks"] = gen
         new_walks = new_walks.unionByName(gen)
 
     ts = F.lit(now).cast("timestamp")
-    node_cols = nodes.columns
-    new_nodes = (
-        nodes.join(
-            decisions.select("node_id", "decision"), "node_id", "left"
-        )
-        .withColumn(
-            "status",
-            F.when(F.col("decision") == "promote", F.lit(schemas.STATUS_ACTIVE))
-            .when(F.col("decision") == "demote", F.lit(schemas.STATUS_INACTIVE))
-            .otherwise(F.col("status")),
-        )
-        .withColumn(
-            "promoted_ts",
-            F.when(F.col("decision") == "promote", ts).otherwise(
-                F.col("promoted_ts")
-            ),
-        )
-        .withColumn(
-            "demoted_ts",
-            F.when(F.col("decision") == "demote", ts).otherwise(F.col("demoted_ts")),
-        )
-        .drop("decision")
-    )
+    flip = {
+        "status": F.when(promote, F.lit(schemas.STATUS_ACTIVE))
+        .when(demote, F.lit(schemas.STATUS_INACTIVE))
+        .otherwise(F.col("status")),
+        "promoted_ts": F.when(promote, ts).otherwise(F.col("promoted_ts")),
+        "demoted_ts": F.when(demote, ts).otherwise(F.col("demoted_ts")),
+    }
+    node_cols = [c for c in decisions.columns if c not in ("visits", "decision")]
+
+    def flipped(df: DataFrame) -> DataFrame:
+        return df.select(*[flip.get(c, F.col(c)).alias(c) for c in node_cols])
+
     if cnts.get("promote", 0) or cnts.get("demote", 0):
-        flipped = decisions.filter(F.col("decision") != "keep")
-        delta["flipped_old"] = flipped.select(*node_cols)
-        delta["flipped_new"] = (
-            flipped.select(
-                *[c for c in node_cols if c not in
-                  ("status", "promoted_ts", "demoted_ts")],
-                F.when(
-                    F.col("decision") == "promote",
-                    F.lit(schemas.STATUS_ACTIVE),
-                ).otherwise(F.lit(schemas.STATUS_INACTIVE)).alias("status"),
-                F.when(F.col("decision") == "promote", ts)
-                .otherwise(F.col("promoted_ts"))
-                .alias("promoted_ts"),
-                F.when(F.col("decision") == "demote", ts)
-                .otherwise(F.col("demoted_ts"))
-                .alias("demoted_ts"),
-            ).select(*node_cols)  # restore declared column order
-        )
-    return new_nodes, new_walks, promoted, cnts, delta
+        delta["flipped_new"] = flipped(decisions.filter(promote | demote))
+    return flipped(decisions), new_walks, promoted, cnts, delta
 
 
 def change_ratio(walks_changed: int, total_visits_: int, alpha: float) -> float:

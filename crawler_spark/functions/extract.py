@@ -220,7 +220,9 @@ def url_spam_score(col) -> "F.Column":
     """Keyword spam score of the URL STRING (RefinedWeb's url
     scoring shape): hard words count 2, soft words 1, plus 1 if the
     url has > 4 digits or a very long (> 120 char) path+query. Pure
-    column math on the lowercased url."""
+    column math on the lowercased url. Keywords match anywhere in
+    it, host included, as RefinedWeb scores the whole URL string
+    (https://freebsd.org/ scores 1 for the 'free' in its host)."""
     u = F.lower(col)
     score = F.lit(0)
     for w in URL_BAD_WORDS:
@@ -262,7 +264,17 @@ def url_filter(
     its url count, but it still grows with the data, so it carries
     no broadcast hint: AQE broadcasts it at runtime when its actual
     size is small (the usual case) and a host-heavy batch cannot OOM
-    the driver."""
+    the driver.
+
+    Raises ValueError if `urls` already has a column this gate
+    writes (spam_score, keep, reason) or uses internally (_host,
+    _blocked, _blk): it would be overwritten or dropped, or make
+    the blocklist join ambiguous."""
+    clash = {"spam_score", "keep", "reason", "_host", "_blocked", "_blk"} & set(
+        urls.columns
+    )
+    if clash:
+        raise ValueError(f"urls already has url_filter column(s) {sorted(clash)}")
     host = F.lower(url_host(F.col(url_col)))
     score = url_spam_score(F.col(url_col))
     out = urls.withColumn("_host", host).withColumn("spam_score", score)

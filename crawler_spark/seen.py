@@ -20,8 +20,11 @@ Design:
    (true positives + ~1% FP), which is what makes the exact check
    affordable at 10^10 (`admit_new_urls`).
  - The cuckoo filter (partial-key cuckoo hashing, 4-way buckets,
-   16-bit fingerprints) is the DELETABLE fallback: demoted/evicted
-   URLs can be removed without rebuilding, which a bloom cannot do.
+   16-bit fingerprints) is the alternative `kind`: it supports
+   delete() without a rebuild, which a bloom cannot. No engine path
+   deletes from the seen set: the engine builds the default bloom
+   kind, and an arbiter demotion flips the node's status without
+   touching `filters` (the url keeps its node row, so it stays seen).
 
 Spark's own BloomFilterAggregate is not exposed in this build's
 function registry (checked); these filters are self-contained numpy
@@ -125,8 +128,9 @@ class BloomFilter:
 
 class CuckooFilter:
     """Partial-key cuckoo filter (Fan et al., CoNEXT'14 — public
-    algorithm): b-way buckets of 16-bit fingerprints; deletable, which
-    is why it backs demotion/unseen transitions where the bloom can't.
+    algorithm): b-way buckets of 16-bit fingerprints; deletable, where
+    the bloom is not. The engine builds the bloom kind and never
+    deletes from the seen set (demotion leaves `filters` untouched).
     """
 
     SLOTS = 4

@@ -76,7 +76,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a SparkSession: apply_session_defaults'
+    semantic settings plus this host's topology.
 
     master defaults to local[$SPARK_GRAFT_CPUS or *]; shuffle
     partitions default to the local core count — at cluster scale the
@@ -88,26 +89,13 @@ def get_spark(
         shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 4)
 
     b = (
-        SparkSession.builder.appName(app_name)
+        apply_session_defaults(SparkSession.builder.appName(app_name))
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # localCheckpoint blocks are reclaimed by the ContextCleaner
-        # only after a DRIVER JVM GC notices the RDD is unreachable;
-        # the default periodic-GC interval (30min) lets a continuous
-        # crawl accumulate ~30min of superseded per-epoch state
-        # blocks in the BlockManager. Iterative operators free their
-        # rounds explicitly (session.free_local_checkpoint); this
-        # bounds everything else.
-        .config("spark.cleaner.periodicGC.interval", "5min")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -127,5 +115,12 @@ def apply_session_defaults(builder):
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # localCheckpoint blocks are reclaimed by the ContextCleaner
+        # only after a DRIVER JVM GC notices the RDD is unreachable;
+        # the default periodic-GC interval (30min) lets a continuous
+        # crawl accumulate ~30min of superseded per-epoch state
+        # blocks in the BlockManager. Iterative operators free their
+        # rounds explicitly (session.free_local_checkpoint); this
+        # bounds everything else.
         .config("spark.cleaner.periodicGC.interval", "5min")
     )

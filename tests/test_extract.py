@@ -2,6 +2,7 @@
 and ParsePubkeys link semantics (reference pkg/crawler/process.go:227-255)."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark import datagen
@@ -150,6 +151,7 @@ def test_url_spam_score_and_filter(spark):
         ("https://num.test/p/1234567890",),              # digits -> +1 only
         ("https://long.test/" + "x" * 115,),             # path+query 116
         ("https://long.test/" + "x" * 121,),             # path+query 122
+        ("https://freebsd.org/",),                       # 'free' in host
     ]
     urls = spark.createDataFrame(rows, "url string")
     blocked = spark.createDataFrame([("evil.test",)], "domain string")
@@ -169,12 +171,17 @@ def test_url_spam_score_and_filter(spark):
     # the length bump counts path+query only, never scheme or host
     assert got["https://long.test/" + "x" * 115] == (True, None, 0)
     assert got["https://long.test/" + "x" * 121] == (True, None, 1)
+    # keywords match the whole url string, host included
+    assert got["https://freebsd.org/"] == (True, None, 1)
     # no blocklist: everything valid + under-threshold keeps
     got2 = {
         r["url"]: r["keep"]
         for r in extract.url_filter(urls, None, max_spam_score=2).collect()
     }
     assert got2["https://sub.evil.test/page"] is True
+    # a caller column the gate would overwrite is refused, not clobbered
+    with pytest.raises(ValueError, match="keep"):
+        extract.url_filter(urls.withColumn("keep", F.lit(True)))
 
 
 def test_url_filter_blocklist_case_insensitive(spark):

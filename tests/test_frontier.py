@@ -267,8 +267,10 @@ def test_apply_arbiter_flips_and_walks(spark):
         walks_per_node=20, seed=42,
     ).localCheckpoint()
     dec = frontier.arbiter_decisions(nodes, walks, NOW, walks_per_node=20)
-    n2, w2, promoted, cnts, _delta = frontier.apply_arbiter(
-        spark, nodes, walks, edges, dec, NOW, walks_per_node=20, seed=42
+    n2, w2, promoted, cnts, delta = frontier.apply_arbiter(
+        spark, walks, edges, dec, NOW, walks_per_node=20, seed=42,
+        walk_id_offset=walks_gen.next_walk_id(walks),
+        node_bucket_expr=seen.url_bucket(F.col("url"), 8),
     )
     # node1 gets promoted (visited by others' walks), gains 20 walks
     assert [r.node_id for r in promoted.collect()] == [1]
@@ -277,6 +279,21 @@ def test_apply_arbiter_flips_and_walks(spark):
     assert st[1] == "active"
     assert w2.filter(F.col("start_id") == 1).count() == 20
     assert w2.count() == walks.count() + 20
+    # the delta's flipped rows are nodes' rows of the flipped ids, and
+    # its bucket sets are url_bucket of the flipped / promoted urls
+    flipped = dec.filter(F.col("decision") != "keep")
+    ids = [r.node_id for r in flipped.collect()]
+    assert 1 in ids
+    assert set(delta["flipped_new"].collect()) == set(
+        n2.filter(F.col("node_id").isin(ids)).collect()
+    )
+
+    def _buckets(df):
+        b = seen.url_bucket(F.col("url"), 8).alias("b")
+        return sorted({r.b for r in df.select(b).collect()})
+
+    assert delta["node_buckets"] == _buckets(flipped)
+    assert delta["promoted_buckets"] == _buckets(promoted)
 
 
 # ---- catalog snapshots ----

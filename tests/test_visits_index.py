@@ -22,7 +22,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_spark import datagen, engine, frontier as frontier_mod
+from crawler_spark import datagen, engine
 from crawler_spark import walks_gen, walks_update
 
 NOW = dt.datetime(2025, 6, 1, tzinfo=dt.timezone.utc)
@@ -103,7 +103,6 @@ def test_delta_epoch_never_scans_store_for_visits(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(walks_gen, "visits_of", _poisoned)
     monkeypatch.setattr(walks_gen, "total_visits", _poisoned)
     monkeypatch.setattr(walks_gen, "next_walk_id", _poisoned)
-    monkeypatch.setattr(frontier_mod, "next_walk_id", _poisoned)
 
     seen_visits = {}
     orig_update = walks_update.update_walks
